@@ -6,9 +6,10 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.expr.Exprs
 import graft.functions.ArrayOps
+import graft.scale.Fixpoint
 
 /** Cluster-level dedup surface of [[Dedup]]: connected components over
-  * the pair graph (fused label-prop with checkpoint reclamation),
+  * the pair graph (fused label-prop on [[Fixpoint]]),
   * dedup-aware splits, and quality survivorship (round-11 split;
   * registration stays on the object).
   */
@@ -28,46 +29,24 @@ private[graft] trait DedupClusterOps extends DedupShingleOps {
     * (surviving) doc_id. Only documents that appear in some pair are
     * emitted; singletons are their own trivial cluster. */
   def clustersOf(pairsIn: DataFrame, maxIters: Int = 20): DataFrame = {
-    val sc = pairsIn.sparkSession.sparkContext
-    // localCheckpoint leaves its RDD blocks in the block manager until the
-    // ContextCleaner happens to GC the reference — across an iterative
-    // loop that is (iters+1) superseded label tables pinned in executor
-    // memory. Read the checkpointed RDD's id straight off the returned
-    // frame's LogicalRDD leaf (scoped to OUR checkpoint — a concurrent
-    // thread's persist in a shared session can never be swept, unlike a
-    // global getPersistentRDDs diff) and free a round's blocks as soon as
-    // the next round has materialized.
-    def ckptRddIds(df: DataFrame): Set[Int] =
-      df.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }.toSet
-    def dropBlocks(ids: Set[Int]): Unit =
-      sc.getPersistentRDDs.filter { case (id, _) => ids(id) }
-        .values.foreach(_.unpersist(blocking = false))
     // both union branches read the pair pipeline — materialize it once
     val pairs = pairsIn.persist()
     // edges are re-joined on dst EVERY round — shuffle them onto the join
     // key once here, so each round's neighbor-min join is exchange-free on
     // the edge side (labels below are checkpointed hash-partitioned on
-    // doc_id, and LogicalRDD preserves outputPartitioning)
+    // doc_id, and the checkpointed frame preserves outputPartitioning)
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(col("dst"))
       .persist()
-    // localCheckpoint (not persist) each round: the label table is
-    // referenced three times per iteration (neighbor-min, both sides of
-    // the pointer-jump self-join), so without lineage TRUNCATION the
-    // logical plan grows 3^iterations and plan handling itself OOMs.
-    // On a cluster with unreliable executors use reliable checkpoint
-    // (sc.setCheckpointDir + .checkpoint()) — same shape, durable.
-    var labels = edges.select(col("dst").as("doc_id")).distinct()
+    // Fixpoint checkpoints each round: the label table is referenced three
+    // times per iteration (neighbor-min, both sides of the pointer-jump
+    // self-join), so without lineage TRUNCATION the logical plan grows
+    // 3^iterations and plan handling itself OOMs.
+    val init = edges.select(col("dst").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint()
-    var labelBlocks = ckptRddIds(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    val labels = Fixpoint.iterate(init, maxIters) { labels =>
       // FUSED pass: neighbor-min and pointer-jump both probe the SAME
       // label table, so resolve both in one union + grouped min instead
       // of two probe joins feeding a 3-way reassembly join (the round-8
@@ -87,49 +66,15 @@ private[graft] trait DedupClusterOps extends DedupShingleOps {
           col("a.cluster_id").as("old"))
       // min(cand) <= old always (the pointer arm's cand is <= the old
       // label), so the grouped min IS the new label; min(old) ignores the
-      // neighbor arm's nulls and recovers the unique old label per doc
-      val next = nbrHit.unionByName(ptrHit)
+      // neighbor arm's nulls and recovers the unique old label per doc.
+      // The changed flag rides the round's checkpoint job as Fixpoint's
+      // tap, so convergence costs no second job.
+      nbrHit.unionByName(ptrHit)
         .groupBy(col("src"))
         .agg(min(col("cand")).as("cluster_id"), min(col("old")).as("old_cid"))
         .select(col("src").as("doc_id"), col("cluster_id"),
-          (col("cluster_id") < col("old_cid")).as("_changed"))
-      // checkpoint + convergence read in ONE job (round 19): the
-      // eager localCheckpoint's count() action already touches every
-      // row while materializing the blocks, so the changed-label count
-      // rides it as an accumulator tap instead of paying a second
-      // aggregation job over the just-cached blocks per round (2 ->  1
-      // jobs/round across all five CC consumers). Same construction as
-      // Dataset.localCheckpoint (row copy -> localCheckpoint -> count
-      // -> LogicalRDD.fromDataset via CheckpointBridge), so the frame
-      // keeps the aggregate's hash partitioning — the next round's
-      // joins stay exchange-free on the label side. Accumulator
-      // exactness: count() is an action, so each partition's updates
-      // commit exactly once (task retries are deduped).
-      val changedIdx = next.schema.fieldIndex("_changed")
-      val acc = sc.longAccumulator("cc_changed")
-      val rows = org.apache.spark.sql.graftops.CheckpointBridge
-        .internalRows(next)
-        .mapPartitions { it =>
-          it.map { r =>
-            if (!r.isNullAt(changedIdx) && r.getBoolean(changedIdx)) acc.add(1L)
-            r.copy()
-          }
-        }
-      rows.localCheckpoint()
-      rows.count()
-      val nextCkpt = org.apache.spark.sql.graftops.CheckpointBridge
-        .checkpointedFrame(next, rows)
-      val nextBlocks = ckptRddIds(nextCkpt)
-      val changed = acc.value
-      // nextCkpt is materialized — the previous round's checkpoint blocks
-      // are now dead weight; free them instead of waiting on the GC-driven
-      // ContextCleaner (which pins iters× label tables in executor memory)
-      dropBlocks(labelBlocks)
-      labelBlocks = nextBlocks
-      labels = nextCkpt.drop("_changed")
-      converged = changed == 0
-      iter += 1
-    }
+          (col("cluster_id") < col("old_cid")).as(Fixpoint.Changed))
+    }(_.changed.contains(0L))
     edges.unpersist()
     pairs.unpersist()
     labels

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.expr.Exprs
+import graft.scale.Fixpoint
 
 /** Model-shaped operators of [[TextOps]]: word-level BPE merge training
   * and encoding, plus the hashing-trick quality classifier and its exact
@@ -45,22 +46,23 @@ private[graft] trait TextModelOps extends TextQualityOps {
     * Scale shape per round: one narrow pass explodes adjacent pairs, ONE
     * count shuffle (map-side partials), the argmax is orderBy+limit 1
     * (TakeOrderedAndProject — never a global window), and the 1-row rule
-    * broadcasts back into a narrow rewrite. Self-pairs (p1 == p2) are
-    * excluded at selection so the greedy rewrite stays closed-form (see
-    * [[mergeOnce]]) — at word granularity they are degenerate phrases
-    * anyway. Rounds are a driver loop over persisted generations, like
-    * the IVF trainer; callers release the cache after their action.
+    * returns to the driver as two literals for a narrow rewrite.
+    * Self-pairs (p1 == p2) are excluded at selection so the greedy
+    * rewrite stays closed-form (see [[mergeOnce]]) — at word granularity
+    * they are degenerate phrases anyway. Generations are [[Fixpoint]]
+    * rounds and the rule table stays on the driver, so the call leaves no
+    * cache behind; the last generation's rule is learned, not applied.
     *
     * Cite: the reference has no tokenizer, but its embedder chunks text
     * for the vector path (caseguard/vectorization/embedder.py) — this is
     * the north-star training-data extension of that stage. */
   def bpeMergesOf(docs: DataFrame, rounds: Int = BpeRounds): DataFrame = {
-    var toks = docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .persist()
-    val bests = (1 to rounds).map { r =>
-      val pairs = toks
+    require(rounds >= 1, s"BPE training needs at least one round, got $rounds")
+    val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    // one generation's most frequent non-self adjacent pair, appended to
+    // the rule table as (round, p1, p2, n)
+    def learn(toks: DataFrame): Option[(Int, String, String, Long)] = {
+      val best = toks
         .filter(size(col("toks")) >= 2)
         .select(explode(transform(sequence(lit(1), size(col("toks")) - 1),
           i => struct(element_at(col("toks"), i).as("p1"),
@@ -68,24 +70,27 @@ private[graft] trait TextModelOps extends TextQualityOps {
         .select(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
         .filter(col("p1") =!= col("p2"))
         .groupBy("p1", "p2").agg(count(lit(1)).as("n"))
-      val best = pairs.orderBy(col("n").desc, col("p1").asc, col("p2").asc)
-        .limit(1)
-        .select(lit(r).cast("int").as("round"), col("p1"), col("p2"), col("n"))
-        .persist()
-      val next = toks.crossJoin(broadcast(best.select("p1", "p2")))
-        .select(col("doc_id"),
-          mergeOnce(col("toks"), col("p1"), col("p2")).as("toks"))
-        .persist()
-      // materialize generation r, then FREE generation r-1 — otherwise
-      // rounds x corpus-sized cache entries pile up until the caller's
-      // clearCache (the 1-row best tables stay cached for the output)
-      next.count()
-      toks.unpersist()
-      toks = next
+        .orderBy(col("n").desc, col("p1").asc, col("p2").asc)
+        .limit(1).collect().headOption
+        .map(r => (rules.size + 1, r.getString(0), r.getString(1), r.getLong(2)))
+      rules ++= best
       best
     }
-    toks.unpersist() // the final generation feeds nothing downstream
-    bests.reduce(_ unionByName _)
+    val init = docs
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 1)
+    // no pair left to merge empties the corpus, as the oracle's join
+    // against an empty rule table does, and that ends the loop
+    val last = Fixpoint.iterate(init, rounds - 1) { toks =>
+      learn(toks).fold(toks.limit(0)) { case (_, p1, p2, _) =>
+        toks.select(col("doc_id"),
+          mergeOnce(col("toks"), lit(p1), lit(p2)).as("toks"))
+      }
+    }(_.rows == 0)
+    learn(last)
+    Fixpoint.release(last)
+    import docs.sparkSession.implicits._
+    rules.toSeq.toDF("round", "p1", "p2", "n")
   }
 
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.scale.Fixpoint
 
 /** Graph operators over the purchase graph (customer —bought-from—
   * supplier, induced by orders ⋈ lineitem): iterative PageRank and the
@@ -123,9 +124,8 @@ object Graph {
     * usage) every node receives votes and the coalesce never fires, so
     * results are bit-identical to the pure-update form; on asymmetric
     * input the library form no longer silently drops source-only
-    * nodes after round 1. Each round's labels persist (consumed twice:
-    * vote join + spine), prior round unpersisted — the [[bfsDistances]]
-    * barrier pattern.
+    * nodes after round 1. Each round's labels are a [[Fixpoint]] round
+    * (consumed twice: vote join + spine).
     *
     * `symmetric = true` (round 13): the caller asserts every node in
     * src ∪ dst has at least one in-edge — true by construction for any
@@ -137,19 +137,19 @@ object Graph {
     * Round-13 measurement note: a fully LAZY chain (no per-round
     * barriers) was tried here and is 1.5-2x SLOWER at the 10x scale-up
     * than the barriered form, because the planner then sees
-    * aggregate-output size guesses instead of materialized label-cache
-    * stats and abandons the broadcast vote join. The barriers stay in
-    * both paths; the cheap wins are the spine skip and hashing the edge
-    * table on the join key once (see the repartition below).
+    * aggregate-output size guesses instead of the measured label-table
+    * size and abandons the broadcast vote join. The barriers stay in
+    * both paths (Fixpoint's checkpoints carry each round's exact row
+    * count as statistics); the cheap wins are the spine skip and hashing
+    * the edge table on the join key once (see the repartition below).
     *
-    * Cache contract: the RETURNED frame is persisted and materialized
-    * (the final round's barrier) — callers read it for free but own its
-    * release (`.unpersist()` when done; Bench/Verify's per-query
-    * `clearCache()` covers the registered usage). The edge cache this
-    * method takes for its own rounds is released before returning —
-    * unless the CALLER had already persisted `edges` (e.g.
-    * [[communityIncidence]] sharing one edge cache across consumers),
-    * in which case the caller's cache is left untouched. */
+    * Cache contract: the RETURNED frame is the final round's checkpoint,
+    * already materialized; its blocks belong to the caller and
+    * `clearCache()` does not free them ([[Fixpoint]]'s cache contract).
+    * The edge cache this method takes for its own rounds is released
+    * before returning — unless the CALLER had already persisted `edges`
+    * (e.g. [[communityIncidence]] sharing one edge cache across
+    * consumers), in which case the caller's cache is left untouched. */
   def labelPropagationOf(edges: DataFrame,
       iters: Int = LpIters, symmetric: Boolean = false): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -174,35 +174,22 @@ object Graph {
         .agg(max(struct(col("n"), (-col("community")).as("negc"))).as("m"))
         .select(col("dst").as("node"), (-col("m.negc")).as("community"))
     }
-    // The per-round persist+count barriers below are load-bearing for
-    // PLAN QUALITY, not just lineage: a materialized label cache has
-    // known (small) stats, so each round's vote join gets planned
-    // against real sizes — broadcast while labels fit, co-partitioned
-    // shuffle join beyond — where a lazily chained iteration hands the
-    // planner aggregate-output guesses and was measured 1.5-2x slower
-    // at the 10x scale-up.
-    var labels = e.select(col("src").as("node"))
+    val init = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .select(col("node"), col("node").as("community"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    for (_ <- 1 to iters) {
+    val labels = Fixpoint.iterate(init, iters) { labels =>
       val upd = voteArgmax(labels)
       // symmetric input (caller-asserted: every node has an in-edge):
       // the vote output IS the full node universe, so the label spine
       // coalesce below would never fire — skip its join entirely
-      val next = (if (symmetric) upd
-        else labels.as("prev")
-          .join(upd.as("u"), Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("u.community"), col("prev.community"))
-              .as("community")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize the barrier before releasing the prior round
-      labels.unpersist(blocking = false)
-      labels = next
-    }
-    // the final barrier already materialized `labels`; the edge cache
+      if (symmetric) upd
+      else labels.as("prev")
+        .join(upd.as("u"), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("u.community"), col("prev.community"))
+            .as("community"))
+    }(_ => false)
+    // the final round already materialized `labels`; the edge cache
     // has no further reader here, so a library caller doesn't leak one
     // MEMORY_AND_DISK edge copy per invocation
     if (!callerCached) e.unpersist(blocking = false)
@@ -239,8 +226,8 @@ object Graph {
     * Input contract: `edges` must be the SYMMETRIZED (both-directions)
     * representation of an undirected graph — Newman modularity is
     * defined on undirected graphs, and the half-edge counts above
-    * assume it. That same contract lets the internal LPA take its
-    * barrier-free `symmetric` chain path.
+    * assume it. That same contract lets the internal LPA run with
+    * `symmetric = true` (no per-round spine join; the barriers stay).
     *
     * Scale shape: labels join onto the (re-used, persisted) edge table
     * once per endpoint — the standard two-hop pattern (shuffle by src,
@@ -275,10 +262,9 @@ object Graph {
 
   /** Shared incidence frames for the community-quality audits: the LPA
     * labels, every (directed half-)edge tagged with both endpoint
-    * communities, and the scalar half-edge total. The edge list and
-    * labels are persisted (labels feed three consumers; module cache
-    * contract — Bench/Verify clearCache() between queries releases
-    * both frames). */
+    * communities, and the scalar half-edge total. The edge list is
+    * persisted (module cache contract — Bench/Verify clearCache() between
+    * queries releases it); the labels are LPA's final checkpoint. */
   private def communityIncidence(edges: DataFrame, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     // hash-partitioned on src before caching: the internal LPA rounds
@@ -289,7 +275,7 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // symmetric: every communityIncidence caller passes the symmetrized
     // purchase edges (edgesOf), so LPA skips the spine join
-    val labels = labelPropagationOf(e, iters, symmetric = true).persist()
+    val labels = labelPropagationOf(e, iters, symmetric = true)
     val m2 = e.agg(count(lit(1)).as("m2"))
     val withC = e
       .join(labels.select(col("node").as("src"), col("community").as("c_src")),
@@ -359,27 +345,17 @@ object Graph {
     * Scale shape: per round, one hash join of the (once-partitioned)
     * edge table against the shrinking-frontier label table plus one
     * grouped min — the Pregel-in-relational-ops shape shared with
-    * [[pageRank]]/[[kCoreOf]], with the same per-round persist
+    * [[pageRank]]/[[kCoreOf]], with the same per-round [[Fixpoint]]
     * barrier so lineage stays linear. */
   def bfsDistancesOf(edges: DataFrame, seeds: DataFrame,
       rounds: Int = BfsRounds): DataFrame = {
-    var labels = seeds.select(col("node"), lit(0L).as("dist")).persist()
-    var reached = labels.count()
-    var round = 0
-    var converged = false
-    while (round < rounds && !converged) {
-      val next = labels
+    val init = seeds.select(col("node"), lit(0L).as("dist"))
+    val labels = Fixpoint.iterate(init, rounds) { labels =>
+      labels
         .unionByName(edges.join(labels, edges("src") === labels("node"))
           .select(edges("dst").as("node"), (col("dist") + 1).as("dist")))
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .persist()
-      val n = next.count() // barrier + free convergence signal
-      labels.unpersist(blocking = false)
-      converged = n == reached
-      reached = n
-      labels = next
-      round += 1
-    }
+    }(r => r.rows == r.prevRows)
     labels.select(
       when(col("node") % 10 === 0, "customer").otherwise("supplier")
         .as("entity_type"),
@@ -419,47 +395,27 @@ object Graph {
     * late rounds get cheaper, and AQE can flip the alive side to
     * broadcast once it fits. */
   def kCoreOf(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    require(rounds >= 1, s"k-core needs at least one peeling round, got $rounds")
     def inducedDeg(alive: DataFrame): DataFrame =
       edges
         .join(alive.select(col("node").as("s_ok")), col("src") === col("s_ok"))
         .join(alive.select(col("node").as("d_ok")), col("dst") === col("d_ok"))
         .groupBy("src").agg(count(lit(1)).as("d"))
-    var alive = edges.select(col("src").as("node")).distinct()
-    var prevCount = -1L
-    var round = 1
-    var converged = false
-    while (round <= rounds && !converged) {
-      val next = inducedDeg(alive)
-        .filter(col("d") >= k)
-        .select(col("src").as("node"))
-        // barrier: inducedDeg consumes `alive` TWICE (src and dst side);
-        // without it each round's plan embeds the previous round's
-        // subtree in both join arms — 2^rounds duplicated work (measured
-        // 24 s vs ~6 s at sf0.1). The alive list is a shrinking node
-        // set, so the cached frame is small and AQE broadcasts it.
-        .persist()
-      // materialize the new round NOW, then drop the prior round's cache:
-      // it is dead weight once `next` holds real blocks, and leaving it
-      // pinned accumulates rounds× storage across repeated library calls
-      // (ADVICE r9). The count is not extra work — each round is computed
-      // exactly once either way, just eagerly. Round 1's `alive` is the
-      // unpersisted seed, so there is nothing to drop.
-      val n = next.count()
-      if (round > 1) alive.unpersist(blocking = false)
-      alive = next
-      // the alive set shrinks monotonically, so an unchanged COUNT means
-      // an unchanged SET — the peeling fixpoint. The count is already in
-      // hand from the materialization barrier, so convergence detection
-      // is FREE, and post-fixpoint rounds would be pure no-op joins:
-      // `rounds` is the safety CAP, not a mandatory cost (the purchase
-      // graph converges in 2 rounds; the cap is 4).
-      converged = n == prevCount
-      prevCount = n
-      round += 1
-    }
-    // the last round's cache stays live — the RETURNED lazy plan reads it;
-    // callers release it after their final action (Bench/Verify clear the
-    // cache between queries), per the module cache contract.
+    def peel(alive: DataFrame): DataFrame =
+      inducedDeg(alive).filter(col("d") >= k).select(col("src").as("node"))
+    // barrier per round: inducedDeg consumes `alive` TWICE (src and dst
+    // side); without it each round's plan embeds the previous round's
+    // subtree in both join arms — 2^rounds duplicated work (measured 24 s
+    // vs ~6 s at sf0.1). The first peel of the lazy seed is round 0.
+    // The alive set shrinks monotonically, so an unchanged COUNT means an
+    // unchanged SET — the peeling fixpoint; `rounds` is the safety CAP,
+    // not a mandatory cost (the purchase graph converges in 2 rounds).
+    val alive = Fixpoint.iterate(
+      peel(edges.select(col("src").as("node")).distinct()), rounds - 1)(peel)(
+      r => r.rows == r.prevRows)
+    // Cache contract: the RETURNED lazy plan reads the last round's
+    // checkpoint, whose blocks belong to the caller; clearCache() does
+    // not free them ([[Fixpoint]]'s cache contract).
     inducedDeg(alive)
       .select(col("src").as("node"), col("d").as("core_deg"))
   }

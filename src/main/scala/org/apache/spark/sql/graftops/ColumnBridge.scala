@@ -14,18 +14,15 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Re-exports of the sql-private pieces of `Dataset.localCheckpoint`, so
-  * an iterative driver loop can materialize a round's checkpoint AND
-  * fold a control scalar (e.g. a convergence count) into the SAME job
-  * via an accumulator, instead of paying one job to checkpoint and a
-  * second to aggregate the just-cached blocks. The returned frame is
-  * built with `LogicalRDD.fromDataset`, exactly like
-  * `Dataset.localCheckpoint`, so the checkpointed rows keep their
-  * output partitioning/ordering (the loop's exchange-free joins depend
-  * on it). */
+/** Re-exports of the sql-private pieces of `Dataset.localCheckpoint` for
+  * [[graft.scale.Fixpoint]], which materializes a round's checkpoint and
+  * its convergence count in one job (see its scaladoc for the
+  * accumulator-tap invariant). */
 object CheckpointBridge {
   import org.apache.spark.rdd.RDD
   import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.plans.logical.Statistics
+  import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
   import org.apache.spark.sql.execution.LogicalRDD
 
   /** The origin dataset's physical rows, for the caller to wrap (add
@@ -36,11 +33,19 @@ object CheckpointBridge {
 
   /** Wrap an already-materialized checkpointed RDD of the origin's rows
     * back into a DataFrame, preserving the origin's partitioning and
-    * ordering (the `Dataset.localCheckpoint` construction). */
+    * ordering (the `Dataset.localCheckpoint` construction). Statistics:
+    * the measured `rowCount` at the row format's width, capped by the
+    * origin's estimate, which counts cached inputs' compressed bytes — so
+    * a label table does not look larger than the cached edges it joins. */
   def checkpointedFrame(origin: org.apache.spark.sql.Dataset[_],
-      rdd: RDD[InternalRow]): org.apache.spark.sql.DataFrame = {
+      rdd: RDD[InternalRow], rowCount: Long): org.apache.spark.sql.DataFrame = {
     val ds = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     val logical = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, logical)
+    val stats = Statistics(
+      sizeInBytes = (EstimationUtils.getSizePerRow(logical.output) * rowCount)
+        .min(logical.stats.sizeInBytes),
+      rowCount = Some(rowCount))
+    val measured = logical.copy()(ds.sparkSession, Some(stats), Some(logical.constraints))
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, measured)
   }
 }

@@ -443,7 +443,7 @@ class TextOpsSpec extends SparkSpec {
           r.getAs[Long]("n_merged")))).toMap
     assert(enc(1L) == ((6L, 3L, 3L)))
     assert(enc(3L) == ((4L, 3L, 1L)))
-    spark.catalog.clearCache() // bpeMergesOf persists its rule tables
+    spark.catalog.clearCache()
   }
 
   test("quality classifier: hashed weights fold to the reference sum") {

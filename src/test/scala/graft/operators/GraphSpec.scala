@@ -45,22 +45,35 @@ class GraphSpec extends SparkSpec {
       "peeling must have converged at the registered round count")
   }
 
-  test("k-core: intermediate round caches are released (only the final " +
-    "alive set stays pinned)") {
-    import spark.implicits._
-    spark.catalog.clearCache()
-    val und = Seq((1L,2L),(1L,3L),(1L,4L),(2L,3L),(2L,4L),(3L,4L),(4L,5L),(5L,6L))
-    val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.kCoreOf(edges, k = 3, rounds = 4).count()
-    // rounds=4 persists 4 alive frames; all but the last are unpersisted
-    // inside the loop, so at most ONE survives the call (ADVICE r9 —
-    // repeated library use must not accumulate executor storage).
-    val leaked = spark.sparkContext.getPersistentRDDs.size - before
-    assert(leaked <= 1, s"$leaked cached intermediates survived kCoreOf")
-    spark.catalog.clearCache()
-  }
+  // One row per loop on graft.scale.Fixpoint, over the shared fixtures:
+  // every round but the last is freed inside the call, so each call may
+  // leave at most ONE persistent RDD of its own (ADVICE r9 — repeated
+  // library use must not accumulate executor storage), and
+  // Fixpoint.release frees that one. clearCache() would not: checkpoint
+  // blocks are not cached Datasets.
+  for ((loop, name) <- Seq(
+      "kCoreOf" -> ("k-core: intermediate round caches are released (only " +
+        "the final alive set stays pinned)"),
+      "clustersOf" -> ("connected components: intermediate round " +
+        "checkpoints are released (only the final label table stays pinned)"),
+      "labelPropagationOf" -> ("label propagation: intermediate round " +
+        "checkpoints are released (only the final label table stays pinned)"),
+      "bfsDistancesOf" -> ("BFS: intermediate round checkpoints are " +
+        "released (only the final distance table stays pinned)"),
+      "bpeMergesOf" -> ("BPE training: intermediate generations are " +
+        "released (the rule table is driver-side, nothing stays pinned)")))
+    test(name) {
+      spark.catalog.clearCache()
+      val call = graft.scale.FixpointLoops.all.toMap.apply(loop)
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val out = call(spark)
+      out.count()
+      val leaked = spark.sparkContext.getPersistentRDDs.size - before
+      assert(leaked <= 1, s"$leaked persistent RDDs survived $loop")
+      graft.scale.Fixpoint.release(out)
+      val kept = spark.sparkContext.getPersistentRDDs.size - before
+      assert(kept <= 0, s"Fixpoint.release left $kept persistent RDDs of $loop")
+    }
 
   test("label propagation: two triangles joined by a bridge settle into " +
       "their own communities") {

@@ -9,8 +9,9 @@ import graft.SparkSpec
   * dynamic partition overwrite touches only the delta's partitions. */
 class ScaleSpec extends SparkSpec {
 
-  /** Max per-task shuffle-read RECORDS across the jobs `body` triggers —
-    * the skew probe every task-metrics test in this suite shares.
+  /** What the jobs `body` triggers cost: how many there were, and the max
+    * per-task shuffle-read RECORDS across them — the probe every
+    * task-metrics and job-count test in this suite shares.
     *
     * Scoped by job group (ADVICE r12): JobStart carries the group
     * property plus the job's stage ids, and TaskEnd is filtered by stage
@@ -21,25 +22,26 @@ class ScaleSpec extends SparkSpec {
     * time the sentinel is submitted, and events are delivered in post
     * order — when the sentinel's stage completes, every earlier probe
     * event (JobStart, TaskEnd) has already been delivered. */
+  private final class Probed(val jobs: Int, val maxTaskShuffleRead: Long)
   private var skewProbeSeq = 0
-  private def maxTaskShuffleRead(body: => Unit): Long = {
+  private def probeJobs(body: => Unit): Probed = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
       SparkListenerStageCompleted, SparkListenerTaskEnd}
     skewProbeSeq += 1
     val group = s"skew-probe-$skewProbeSeq"
     val sentinel = s"skew-probe-flush-$skewProbeSeq"
-    class GroupMaxShuffleRead extends SparkListener {
+    class GroupProbe extends SparkListener {
       private val stages =
         java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
       val byStage = scala.collection.concurrent.TrieMap[Int, Long]()
       val names = scala.collection.concurrent.TrieMap[Int, String]()
       @volatile var maxRecords = 0L
-      @volatile var probeJobs = 0
+      @volatile var jobs = 0
       @volatile var flushed = false
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val g = if (js.properties == null) null
                 else js.properties.getProperty("spark.jobGroup.id")
-        if (g == group) { probeJobs += 1; js.stageIds.foreach(stages.add(_)) }
+        if (g == group) { jobs += 1; js.stageIds.foreach(stages.add(_)) }
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
@@ -55,7 +57,7 @@ class ScaleSpec extends SparkSpec {
         if (sc.stageInfo.name.contains(sentinel)) flushed = true
       }
     }
-    val l = new GroupMaxShuffleRead
+    val l = new GroupProbe
     spark.sparkContext.addSparkListener(l)
     try {
       spark.sparkContext.setJobGroup(group, "skew probe")
@@ -67,14 +69,38 @@ class ScaleSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30_000_000_000L
       while (!l.flushed && System.nanoTime() < deadline) Thread.sleep(10)
       assert(l.flushed, "listener bus did not deliver the sentinel in 30s")
-      assert(l.probeJobs > 0, "no job carried the probe's job group")
-      info("per-stage max reads: " + l.byStage.toSeq.sortBy(-_._2).take(6)
+      assert(l.jobs > 0, "no job carried the probe's job group")
+      info(s"${l.jobs} jobs; per-stage max reads: " + l.byStage.toSeq
+        .sortBy(-_._2).take(6)
         .map { case (s, r) => s"$s:$r:${l.names.getOrElse(s, "?")}" })
-      l.maxRecords
+      new Probed(l.jobs, l.maxRecords)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
     }
+  }
+
+  private def maxTaskShuffleRead(body: => Unit): Long =
+    probeJobs(body).maxTaskShuffleRead
+
+  test("Fixpoint loops schedule no more jobs than the hand-written loops " +
+      "they replaced") {
+    // Jobs per call plus collect() on FixpointLoops' fixtures, measured
+    // with this probe: (the persist/count and accumulator-tapped
+    // checkpoint loops the combinator replaced, the Fixpoint loops). The
+    // Fixpoint count is the bound: every fixture materializes at least
+    // two rounds, so one extra action per round exceeds it.
+    val jobs = Map("clustersOf" -> ((25, 21)), "labelPropagationOf" -> ((29, 21)),
+      "bfsDistancesOf" -> ((24, 14)), "kCoreOf" -> ((16, 10)),
+      "bpeMergesOf" -> ((21, 9)))
+    for ((loop, call) <- FixpointLoops.all) {
+      val (replaced, bound) = jobs(loop)
+      assert(bound <= replaced, s"$loop's bound exceeds the replaced loop's jobs")
+      val n = probeJobs { call(spark).collect() }.jobs
+      assert(n <= bound, s"$loop schedules $n jobs, bound $bound " +
+        s"(replaced loop: $replaced)")
+    }
+    spark.catalog.clearCache()
   }
 
   test("salted counts equal plain counts on a skewed key") {
@@ -452,7 +478,7 @@ class ScaleSpec extends SparkSpec {
        }
       }
     }
-    spark.catalog.clearCache() // release the LPA round barriers
+    spark.catalog.clearCache() // release the LPA edge cache
   }
 
   test("spread follows the session's parallelism and never forces an exchange on wide input") {
