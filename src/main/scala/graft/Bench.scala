@@ -1,21 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // testdata tables are single parquet files; smaller split sizes give
-      // the scan stages real parallelism on local[N]
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // events.parquet is TIMESTAMP(NANOS); Tables.events requires this
-      .config(Tables.NanosAsLongConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
     // Warmup outside the timed region: JIT/codegen spin-up and parquet
     // footer reads otherwise land entirely on whichever query runs first.
     spark.range(1000000L).selectExpr("sum(id * 2)").collect()
@@ -31,12 +19,7 @@ object Bench {
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run to named queries — the
     // fast loop for profiling a single regressed query without paying
     // the full-registry wall clock
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val registry = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val registry = Session.selected()
     // The timed action evaluates EVERY output column: executing the
     // frame's own physical plan (toRdd) counts fully-built rows, where
     // a df.count() re-optimizes with zero referenced columns and lets
@@ -47,18 +30,22 @@ object Bench {
     // pure projections benched as footer metadata reads. Verify always
     // paid the full cost (it writes parquet); the bench now measures
     // the same work a consumer of the results would trigger.
-    def timeOnly(reg: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]):
+    def timeOnly(reg: Map[String, (SparkSession, String) => DataFrame]):
         Map[String, Option[Double]] = reg.map { case (name, fn) =>
+      var df: Option[DataFrame] = None
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true } catch {
+      val ok = try {
+        df = Some(fn(spark, sfDir)); df.get.queryExecution.toRdd.count(); true
+      } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // queries may persist() intermediates as optimization barriers; drop
-      // them so later queries aren't squeezed by leaked cache memory
-      spark.catalog.clearCache()
+      // queries may persist() or checkpoint intermediates as optimization
+      // barriers; drop them so later queries aren't squeezed by leaked
+      // cache memory
+      Session.cleanup(spark, df.toSeq: _*)
       name -> (if (ok) Some(dt) else None)
     }
     val pass1 = timeOnly(registry)
@@ -144,14 +131,14 @@ object Bench {
     // and pass arrays to the gitignored tmp/bench_full_last.json, so
     // drift adjudication of a driver run keeps its raw data without the
     // anchor ever moving by accident.
-    if (only.isEmpty) {
+    if (Session.only.isEmpty) {
       val line =
         s"""{$head,"queries":$fullQs,"passes":$passesJs,"sf":"$sfDir"}"""
       new java.io.File("tmp").mkdirs()
       java.nio.file.Files.write(
         java.nio.file.Paths.get("tmp/bench_full_last.json"),
         line.getBytes("UTF-8"))
-      if (sys.env.get("SPARK_GRAFT_ANCHOR").contains("1"))
+      if (Session.anchor)
         java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
           line.getBytes("UTF-8"))
     }

@@ -263,8 +263,11 @@ object Graph {
   /** Shared incidence frames for the community-quality audits: the LPA
     * labels, every (directed half-)edge tagged with both endpoint
     * communities, and the scalar half-edge total. The edge list is
-    * persisted (module cache contract — Bench/Verify clearCache() between
-    * queries releases it); the labels are LPA's final checkpoint. */
+    * persisted (module cache contract — the `clearCache()` in
+    * [[graft.Session.cleanup]] between queries releases it); the labels
+    * are LPA's final checkpoint, which `clearCache()` does not free:
+    * the same cleanup frees it through the query's frame
+    * ([[Fixpoint.release]]). */
   private def communityIncidence(edges: DataFrame, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     // hash-partitioned on src before caching: the internal LPA rounds

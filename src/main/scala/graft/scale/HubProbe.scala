@@ -1,11 +1,8 @@
 package graft.scale
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
-  SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Session
 
 /** Planted mega-hub skew probe for the argmax LPA round (VERDICT r12 #2).
   *
@@ -16,13 +13,13 @@ import graft.Tables
   * `row_number().over(partitionBy(dst))` funneled the full in-degree
   * through one reducer. This main re-runs that proof where it matters:
   * the REAL registered edge table at the 100x synthetic scale-up
-  * (`tmp/sf10synth`, ~50M directed purchase edges) plus one planted hub
-  * with `SPARK_GRAFT_HUB_DEG` (default 1.5M) distinct-labeled
-  * in-neighbors — round 1 labels are unique per node, so the hub's vote
-  * set is the full spoke count by construction.
+  * (`SPARK_GRAFT_SF_DIR=tmp/sf10synth`, ~50M directed purchase edges)
+  * plus one planted hub with `SPARK_GRAFT_HUB_DEG` (default 1.5M)
+  * distinct-labeled in-neighbors — round 1 labels are unique per node,
+  * so the hub's vote set is the full spoke count by construction.
   *
-  * It runs the full library LPA (default rounds) under Bench's session
-  * confs, records per-stage task metrics via a listener, and prints ONE
+  * It runs the full library LPA (default rounds) in a [[graft.Session]],
+  * records per-stage task metrics in a [[JobLedger]], and prints ONE
   * JSON line with, per qualifying stage (median task runtime >= 200 ms —
   * below that, scheduler jitter dominates and a ratio is noise):
   * task count, median/max executor run time, max shuffle-read records.
@@ -42,18 +39,9 @@ import graft.Tables
   */
 object HubProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "tmp/sf10synth")
-    val hubDeg = sys.env.getOrElse("SPARK_GRAFT_HUB_DEG", "1500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config(Tables.NanosAsLongConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val hubDeg = Session.hubDegree
+    val spark = Session.local()
 
     val base = graft.operators.Graph.edgesOf(spark, sfDir)
     val hub = base.agg(max(greatest(col("src"), col("dst"))))
@@ -65,69 +53,32 @@ object HubProbe {
       .union(spokes.select(lit(hub).as("src"), col("s").as("dst")))
     val edges = base.union(hubEdges)
 
-    // per-stage task metrics: executor run time + shuffle-read records.
-    // The probe owns the session, so every task belongs to it; stages
-    // are keyed by id and named at completion.
-    val durs = scala.collection.concurrent.TrieMap[Int,
-      scala.collection.mutable.ArrayBuffer[Long]]()
-    val reads = scala.collection.concurrent.TrieMap[Int, Long]()
-    val names = scala.collection.concurrent.TrieMap[Int, String]()
-    @volatile var flushed = false
-    val sentinel = "hub-probe-flush"
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          durs.getOrElseUpdate(te.stageId,
-            scala.collection.mutable.ArrayBuffer.empty[Long])
-            .synchronized {
-              durs(te.stageId) += m.executorRunTime
-            }
-          val r = m.shuffleReadMetrics.recordsRead
-          if (r > reads.getOrElse(te.stageId, -1L)) reads(te.stageId) = r
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        names(sc.stageInfo.stageId) = sc.stageInfo.name.take(60)
-        if (sc.stageInfo.name.contains(sentinel)) flushed = true
-      }
+    val ((nNodes, hubCommunity, wallSec), ledger) = JobLedger.measure(spark) {
+      val t0 = System.nanoTime()
+      val labels =
+        graft.operators.Graph.labelPropagationOf(edges, symmetric = true)
+      val n = labels.count()
+      // sanity: the hub resolved to ONE community and its spokes followed
+      // it (all-n=1 votes tie-break to the lowest in-neighbor community)
+      val community = labels.filter(col("node") === hub).head().getLong(1)
+      val wall = (System.nanoTime() - t0) / 1e9
+      Fixpoint.release(labels)
+      (n, community, wall)
     }
-    spark.sparkContext.addSparkListener(listener)
-
-    val t0 = System.nanoTime()
-    val labels =
-      graft.operators.Graph.labelPropagationOf(edges, symmetric = true)
-    val nNodes = labels.count()
-    // sanity: the hub resolved to ONE community and its spokes followed it
-    // (all-n=1 votes tie-break to the lowest in-neighbor community)
-    val hubCommunity = labels.filter(col("node") === hub).head().getLong(1)
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    labels.unpersist(blocking = false)
-
-    // flush the listener bus: a final marker job, delivered in post order
-    spark.sparkContext.setCallSite(sentinel)
-    try spark.sparkContext.parallelize(1 to 1, 1).count()
-    finally spark.sparkContext.clearCallSite()
-    val deadline = System.nanoTime() + 30_000_000_000L
-    while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
-    require(flushed, "listener bus did not deliver the sentinel in 30s")
 
     def med(xs: Seq[Long]): Long = {
       val s = xs.sorted; s(s.length / 2)
     }
-    case class St(stage: Int, n: Int, medMs: Long, maxMs: Long,
-        maxRead: Long, name: String)
-    val stats = durs.toSeq.map { case (sid, buf) =>
-      val xs = buf.synchronized(buf.toVector)
-      St(sid, xs.length, med(xs), xs.max, reads.getOrElse(sid, 0L),
-        names.getOrElse(sid, "?"))
-    }.sortBy(-_.maxMs)
+    case class St(stage: Int, n: Int, medMs: Long, maxMs: Long, maxRead: Long)
+    val stats = ledger.stages.filter(_.taskRunMs.nonEmpty).map(s =>
+      St(s.id, s.taskRunMs.length, med(s.taskRunMs), s.taskRunMs.max,
+        s.maxTaskShuffleRecords)).sortBy(-_.maxMs)
     // qualifying = stages where a skew funnel would be visible; tiny
     // stages (driver folds, barrier counts) are scheduler noise
     val qual = stats.filter(_.medMs >= 200L)
     val worst = qual.map(s => s.maxMs.toDouble / s.medMs.toDouble)
       .foldLeft(0.0)(math.max)
-    val maxRead = stats.map(_.maxRead).foldLeft(0L)(math.max)
+    val maxRead = ledger.maxTaskShuffleRecords
     val stageJson = qual.take(12).map(s =>
       s"""{"stage":${s.stage},"tasks":${s.n},"med_ms":${s.medMs},""" +
       s""""max_ms":${s.maxMs},"max_read":${s.maxRead}}""").mkString(",")

@@ -49,3 +49,12 @@ object CheckpointBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, measured)
   }
 }
+
+/** Re-export of the spark-private listener bus for [[graft.scale.JobLedger]]:
+  * block until every listener queue has delivered the events posted so
+  * far. A job's task, stage and job-end events are posted before its
+  * action returns, so after `drain` a listener has seen all of them. */
+object ListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
+}

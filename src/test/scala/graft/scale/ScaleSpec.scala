@@ -9,79 +9,21 @@ import graft.SparkSpec
   * dynamic partition overwrite touches only the delta's partitions. */
 class ScaleSpec extends SparkSpec {
 
-  /** What the jobs `body` triggers cost: how many there were, and the max
-    * per-task shuffle-read RECORDS across them — the probe every
-    * task-metrics and job-count test in this suite shares.
-    *
-    * Scoped by job group (ADVICE r12): JobStart carries the group
-    * property plus the job's stage ids, and TaskEnd is filtered by stage
-    * membership, so a concurrent job on the shared session can never
-    * pollute the measurement. Completion detection is a SENTINEL job on
-    * the same ordered listener bus instead of a sleep-until-quiet loop:
-    * `body`'s actions are synchronous, so its jobs have all ended by the
-    * time the sentinel is submitted, and events are delivered in post
-    * order — when the sentinel's stage completes, every earlier probe
-    * event (JobStart, TaskEnd) has already been delivered. */
-  private final class Probed(val jobs: Int, val maxTaskShuffleRead: Long)
-  private var skewProbeSeq = 0
-  private def probeJobs(body: => Unit): Probed = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerStageCompleted, SparkListenerTaskEnd}
-    skewProbeSeq += 1
-    val group = s"skew-probe-$skewProbeSeq"
-    val sentinel = s"skew-probe-flush-$skewProbeSeq"
-    class GroupProbe extends SparkListener {
-      private val stages =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val byStage = scala.collection.concurrent.TrieMap[Int, Long]()
-      val names = scala.collection.concurrent.TrieMap[Int, String]()
-      @volatile var maxRecords = 0L
-      @volatile var jobs = 0
-      @volatile var flushed = false
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = if (js.properties == null) null
-                else js.properties.getProperty("spark.jobGroup.id")
-        if (g == group) { jobs += 1; js.stageIds.foreach(stages.add(_)) }
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && stages.contains(te.stageId)) {
-          val r = m.shuffleReadMetrics.recordsRead
-          if (r > maxRecords) maxRecords = r
-          if (r > byStage.getOrElse(te.stageId, -1L)) byStage(te.stageId) = r
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        if (stages.contains(sc.stageInfo.stageId))
-          names(sc.stageInfo.stageId) = sc.stageInfo.name.take(80)
-        if (sc.stageInfo.name.contains(sentinel)) flushed = true
-      }
-    }
-    val l = new GroupProbe
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "skew probe")
-      body
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.setCallSite(sentinel)
-      try spark.sparkContext.parallelize(1 to 1, 1).count()
-      finally spark.sparkContext.clearCallSite()
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (!l.flushed && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(l.flushed, "listener bus did not deliver the sentinel in 30s")
-      assert(l.jobs > 0, "no job carried the probe's job group")
-      info(s"${l.jobs} jobs; per-stage max reads: " + l.byStage.toSeq
-        .sortBy(-_._2).take(6)
-        .map { case (s, r) => s"$s:$r:${l.names.getOrElse(s, "?")}" })
-      new Probed(l.jobs, l.maxRecords)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+  /** The jobs `body` triggers, from the [[JobLedger]] — the probe every
+    * task-metrics and job-count test in this suite shares. The ledger is
+    * scoped to its own job group, so a concurrent job on the shared
+    * session never pollutes the measurement. */
+  private def probeJobs(body: => Unit): JobLedger.Report = {
+    val (_, ledger) = JobLedger.measure(spark)(body)
+    assert(ledger.jobs.nonEmpty, "no job carried the probe's job group")
+    info(s"${ledger.jobs.size} jobs; per-stage max reads: " + ledger.stages
+      .sortBy(-_.maxTaskShuffleRecords).take(6)
+      .map(s => s"${s.id}:${s.maxTaskShuffleRecords}:${s.name.take(80)}"))
+    ledger
   }
 
   private def maxTaskShuffleRead(body: => Unit): Long =
-    probeJobs(body).maxTaskShuffleRead
+    probeJobs(body).maxTaskShuffleRecords
 
   test("Fixpoint loops schedule no more jobs than the hand-written loops " +
       "they replaced") {
@@ -96,7 +38,7 @@ class ScaleSpec extends SparkSpec {
     for ((loop, call) <- FixpointLoops.all) {
       val (replaced, bound) = jobs(loop)
       assert(bound <= replaced, s"$loop's bound exceeds the replaced loop's jobs")
-      val n = probeJobs { call(spark).collect() }.jobs
+      val n = probeJobs { call(spark).collect() }.jobs.size
       assert(n <= bound, s"$loop schedules $n jobs, bound $bound " +
         s"(replaced loop: $replaced)")
     }
@@ -235,37 +177,47 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("spread's partition probe schedules zero jobs on a scan frame") {
-    val sc = spark.sparkContext
-    // positive control first: prove the job-group detection machinery
-    // actually sees jobs — df.rdd on a post-aggregate frame (what the
-    // guard forbids) finalizes and EXECUTES the upstream stage
-    sc.setJobGroup("graft-probe-positive", "probe positive control")
-    spark.read.parquet(s"$sf/orders.parquet")
-      .groupBy("o_orderstatus").count().rdd.getNumPartitions
-    sc.clearJobGroup()
-    def jobsIn(group: String, waitForSome: Boolean): Int = {
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var n = sc.statusTracker.getJobIdsForGroup(group).length
-      while ((if (waitForSome) n == 0 else true) && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        n = sc.statusTracker.getJobIdsForGroup(group).length
-        if (!waitForSome && n > 0) return n // early out: a job appeared
-      }
-      n
-    }
-    assert(jobsIn("graft-probe-positive", waitForSome = true) > 0,
-      "control failed: the status tracker never saw the aggregate probe's job")
+    // positive control first: prove the ledger actually sees jobs —
+    // df.rdd on a post-aggregate frame (what the guard forbids)
+    // finalizes and EXECUTES the upstream stage
+    val aggregated = spark.read.parquet(s"$sf/orders.parquet")
+      .groupBy("o_orderstatus").count()
+    val (_, control) = JobLedger.measure(spark)(aggregated.rdd.getNumPartitions)
+    assert(control.jobs.nonEmpty,
+      "control failed: the ledger never saw the aggregate probe's job")
     // the real assertion: spread on a scan(+project/filter) frame probes
     // partition count without scheduling ANY job. Build the frame OUTSIDE
-    // the group — parquet schema inference may run its own job, and that
-    // read-time cost isn't what this test measures.
+    // the measurement — parquet schema inference may run its own job, and
+    // that read-time cost isn't what this test measures.
     val scan = spark.read.parquet(s"$sf/orders.parquet")
       .filter(col("o_orderstatus") === "O").select("o_orderkey")
-    sc.setJobGroup("graft-probe-scan", "spread probe under test")
-    Scale.spread(scan)
-    sc.clearJobGroup()
-    assert(jobsIn("graft-probe-scan", waitForSome = false) == 0,
+    val (_, probed) = JobLedger.measure(spark)(Scale.spread(scan))
+    assert(probed.jobs.isEmpty,
       "spread's partition probe must not schedule jobs on a scan frame")
+  }
+
+  test("JobLedger counts only the measured body's jobs, not a concurrent " +
+      "thread's") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val go = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    // started before the measurement, so it does not inherit the ledger's
+    // job group; its job runs between the body's two jobs
+    val other = new Thread(() => {
+      go.await()
+      try sc.parallelize(1 to 10, 5).count() finally done.countDown()
+    })
+    other.start()
+    val (_, ledger) = JobLedger.measure(spark) {
+      sc.parallelize(1 to 10, 2).count()
+      go.countDown()
+      assert(done.await(60, TimeUnit.SECONDS), "the other thread's job hung")
+      sc.parallelize(1 to 10, 3).count()
+    }
+    other.join()
+    assert(ledger.jobs.size == 2, s"counted ${ledger.jobs.size} jobs")
+    assert(ledger.stages.map(_.tasks).sorted == Seq(2, 3))
   }
 
   test("spread rejects frames with shuffle-introducing nodes (contract guard)") {

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Spot-bench runner: plain-JVM graft.Bench with build.sbt's add-opens set.
 # Usage: tools/run_bench.sh <sfdir> <xmx> [only-csv]
-# Parallelism: SPARK_GRAFT_CPUS (default: the host's core count).
+# Parallelism, session time zone and every other env knob's default:
+# graft.Session (SPARK_GRAFT_CPUS defaults to the JVM's processor count).
 #
 # Full-registry runs write their complete per-query map + pass arrays to
 # tmp/bench_full_last.json (gitignored). The committed anchor
@@ -28,7 +29,7 @@ only="${3:-}"
 # kernel's slow mmap/munmap made every BypassMergeSortShuffleWriter merge
 # a map0/unmap0 storm. Streamed copies + tmpfs shuffle dirs measured
 # 297.8 -> 257.1 s on the full registry with no per-query regression.
-env SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" ${only:+SPARK_GRAFT_ONLY="$only"} \
-  java $ADDOPENS -Dspark.sql.session.timeZone=UTC -Dspark.buffer.pageSize=4m \
+env SPARK_GRAFT_SF_DIR="$1" ${only:+SPARK_GRAFT_ONLY="$only"} \
+  java $ADDOPENS -Dspark.buffer.pageSize=4m \
   -Dspark.file.transferTo=false -Dspark.local.dir=/dev/shm/spark-scratch \
   -cp target/scala-2.13/classes:/opt/spark/jars/'*' -Xmx"$2" graft.Bench
