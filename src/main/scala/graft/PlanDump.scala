@@ -4,14 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 
-/** Round-18 measurement harness: dump `.explain("formatted")` for named
-  * registry queries to files (plans/r18/<name>_<suffix>.txt), so every
-  * optimization's before/after plan shape is a committed artifact the
-  * judge can diff without running Spark.
+/** Dump `.explain("formatted")` of named registry queries to
+  * `<outDir>/<name>_<suffix>.txt`, on demand: a plan-affecting change
+  * dumps its before and after plans into the git-ignored `tmp/` and
+  * diffs them; the dumps are not committed.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [names-csv]
+  * Usage: runMain graft.PlanDump <sfDir> tmp/plans <suffix> [names-csv]
   * (no names = every registered query). The session is Bench's
   * ([[Session.local]]), so the dumped plan is the one the bench executes.
+  * The dump is taken before execution, so an adaptive plan shows its
+  * initial form; [[graft.scale.Probe]]'s operator walk shows the final
+  * one.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

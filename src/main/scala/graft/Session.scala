@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session builder of the CLI mains ([[Bench]], [[Verify]],
-  * [[PlanDump]], [[graft.scale.Probe]], [[graft.scale.HubProbe]]), the one
-  * reader of their env knobs, and the cleanup they run between queries.
+  * [[PlanDump]], [[graft.scale.Probe]], [[graft.scale.HubProbe]]) and of
+  * `tools/bucket_stats.scala`, the one reader of their env knobs, and the
+  * cleanup they run between queries.
   *
   * Each knob is read here, once, with one default:
   *

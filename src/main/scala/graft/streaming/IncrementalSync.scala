@@ -149,35 +149,21 @@ object IncrementalSync {
     StepResult(ok.toSeq, Seq.empty, dead.toSeq)
   }
 
-  /** The durable retry backlog as of (strictly before) `below`, newest
-    * surviving batch partition only — the same retry-safe read rule as
-    * [[admissionIndex]]/[[mgState]]: a replayed batch must never read
-    * its own failed attempt's output.
-    *
-    * The latest batch comes from a separate always-one-row MANIFEST
-    * partition, not from the backlog files themselves: an empty retry
-    * set writes zero parquet files, so partition discovery cannot see
-    * it, and "newest visible backlog partition" would silently re-read
-    * the STALE pre-resolution backlog — re-dead-lettering every
-    * resolved job on each subsequent batch. The explicit read schema
-    * makes the empty partition readable. */
+  /** The durable retry backlog as of (strictly before) `below`: the
+    * newest committed `backlog/batch=N` partition ([[BatchLog]]'s rule,
+    * as for [[latestWatermarks]] and [[mgState]]) — a replayed batch must
+    * never read its own failed attempt's output, and a torn backlog
+    * write falls back to the batch before it. The explicit read schema
+    * makes a resolved ladder's empty partition read as zero rows, so it
+    * supersedes the older non-empty backlog instead of being skipped. */
   def retryBacklog(spark: SparkSession, stateDir: String,
-                   below: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val empty = Seq.empty[Job].toDF()
-    val mdir = new java.io.File(s"$stateDir/manifest")
-    if (!mdir.exists()) return empty
-    val m = spark.read.parquet(mdir.toString).filter(col("batch") < below)
-    // partition discovery types small batch= values as INT
-    val latest = m.agg(max(col("batch")).cast("long")).collect().head
-    if (latest.isNullAt(0)) return empty
-    val schema = org.apache.spark.sql.Encoders.product[Job].schema
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(schema).parquet(s"$stateDir/backlog")
-      .filter(col("batch") === latest.getLong(0))
-      .select("job_id", "tenant_id", "case_ref", "priority", "attempts")
-  }
+                   below: Long): org.apache.spark.sql.DataFrame =
+    backlog(spark, stateDir).read(below, JobSchema)
+
+  private val JobSchema = org.apache.spark.sql.Encoders.product[Job].schema
+
+  private def backlog(spark: SparkSession, stateDir: String) =
+    new BatchLog(spark, s"$stateDir/backlog", "batch=")
 
   // -------------------------------------------------------------------
   // State migration: pre-round-12 arithmetic job ids → xxhash64 ids
@@ -218,7 +204,9 @@ object IncrementalSync {
     * nothing more is recoverable). Decodable rows land in
     * `newStateDir/backlog/batch=N`; garbled rows land in
     * `newStateDir/quarantine/batch=N` for operator review instead of
-    * silently re-entering the ladder.
+    * silently re-entering the ladder. The backlog is written last, so
+    * its `_SUCCESS` marks the migration complete: a crashed migration
+    * leaves nothing [[retryBacklog]] reads, and re-running it converges.
     *
     * THE FRONTIER MUST SIT STRICTLY BELOW THE RESUMING STREAM'S FIRST
     * batchId, or the migrated backlog is never read (retryBacklog reads
@@ -227,7 +215,8 @@ object IncrementalSync {
     * shapes, so the parking batch is explicit:
     *  - resuming with the OLD checkpoint (batchIds continue above the
     *    old frontier): omit `resumeFrom` — state parks at the old
-    *    manifest frontier, exactly where the stream left it;
+    *    dir's newest committed backlog batch, exactly where the stream
+    *    left it;
     *  - resuming with a FRESH checkpoint (batchIds restart at 0 — the
     *    natural move after a breaking upgrade): pass
     *    `resumeFrom = Some(firstBatchId)` (usually `Some(0L)`) — state
@@ -239,27 +228,21 @@ object IncrementalSync {
                         newStateDir: String,
                         resumeFrom: Option[Long] = None): Unit = {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val mdir = new java.io.File(s"$oldStateDir/manifest")
-    require(mdir.exists(), s"no manifest under $oldStateDir")
-    val latestRow = spark.read.parquet(mdir.toString)
-      .agg(max(col("batch")).cast("long")).collect().head
-    require(!latestRow.isNullAt(0), s"empty manifest under $oldStateDir")
-    val latest = latestRow.getLong(0)
+    val old = backlog(spark, oldStateDir)
+    val latest = old.latest(below = Long.MaxValue).getOrElse(
+      throw new IllegalArgumentException(s"no committed backlog under $oldStateDir"))
     val parkAt = resumeFrom.map(_ - 1L).getOrElse(latest)
     val classified = classifyLegacyJobs(
-      retryBacklog(spark, oldStateDir, below = Long.MaxValue)).persist()
+      spark.read.schema(JobSchema).parquet(old.path(latest))).persist()
+    classified.filter(col("action") === "quarantine")
+      .write.mode("overwrite")
+      .parquet(s"$newStateDir/quarantine/batch=$parkAt")
     classified.filter(col("action") === "migrate")
       .select(
         xxhash64(col("tenant_id"), col("case_ref"), col("serial_residue"))
           .as("job_id"),
         col("tenant_id"), col("case_ref"), col("priority"), col("attempts"))
       .write.mode("overwrite").parquet(s"$newStateDir/backlog/batch=$parkAt")
-    classified.filter(col("action") === "quarantine")
-      .write.mode("overwrite")
-      .parquet(s"$newStateDir/quarantine/batch=$parkAt")
-    Seq(parkAt).toDF("done")
-      .write.mode("overwrite").parquet(s"$newStateDir/manifest/batch=$parkAt")
     classified.unpersist()
     ()
   }
@@ -344,14 +327,9 @@ object IncrementalSync {
     all.filter(succeeds).write.mode("overwrite")
       .parquet(s"$outDir/succeeded/batch=$batchId")
     dead.write.mode("overwrite").parquet(s"$outDir/dead/batch=$batchId")
+    // the backlog is written last: its _SUCCESS commits the batch's
+    // state for the next batch's retryBacklog
     retry.write.mode("overwrite").parquet(s"$stateDir/backlog/batch=$batchId")
-    // the manifest row is written LAST and is never empty — it only
-    // marks a batch's backlog as current once that backlog is fully
-    // on disk (see retryBacklog's scaladoc for why file presence
-    // alone cannot carry this signal)
-    locally { import spark.implicits._
-      Seq(batchId).toDF("done")
-        .write.mode("overwrite").parquet(s"$stateDir/manifest/batch=$batchId") }
     all.unpersist()
     ()
   }
@@ -736,14 +714,12 @@ object IncrementalSync {
     triggered
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val vPath = s"$outDir/watermarks/v$batchId"
+        val versions = watermarkLog(spark, outDir)
         // a fully-committed vN means attempt 1 of this batch finished the
         // durable side before the checkpoint commit; the replay is a no-op
         // (rewriting would also yank files from under an external reader
         // who already picked vN as latest)
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$vPath/_SUCCESS"))) {
+        if (versions.committed(batchId)) {
           // the skip must still CONSUME the batch: the stateful operator
           // upstream only commits its per-partition state stores when
           // every partition is processed, and Spark validates exactly
@@ -772,7 +748,7 @@ object IncrementalSync {
               .groupBy("tenant_id", "case_ref")
               .agg(max(col("last_serialno")).as("last_serialno"))
           }
-          merged.write.mode("overwrite").parquet(vPath)
+          merged.write.mode("overwrite").parquet(versions.path(batchId))
           changes.unpersist()
           pruneWatermarks(spark, outDir, keep = 3, below = batchId)
         }
@@ -794,45 +770,24 @@ object IncrementalSync {
     * latency in batches — same contract as the change-log rewrite race
     * documented on [[syncPipeline]]. */
   def pruneWatermarks(spark: SparkSession, outDir: String,
-                      keep: Int, below: Long): Unit = {
-    val base = new org.apache.hadoop.fs.Path(s"$outDir/watermarks")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) {
-      val versions = fs.listStatus(base)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-        .flatMap(st => scala.util.Try(st.getPath.getName.drop(1).toLong).toOption)
-        .filter(_ < below)
-        .sorted(Ordering[Long].reverse)
-      versions.drop(keep).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/watermarks/v$v"), true)
-      }
-    }
-  }
+                      keep: Int, below: Long): Unit =
+    watermarkLog(spark, outDir).prune(keep, below)
 
   /** Highest COMMITTED watermark version (has a _SUCCESS marker, so a
     * torn write is never picked up), optionally only versions strictly
-    * below `below`. Listed through the Hadoop FileSystem API so outDir
-    * may live on any supported filesystem (HDFS/S3A/local), not just
-    * java.io-visible paths. */
+    * below `below`. Listed through [[BatchLog]], so outDir may live on
+    * any Hadoop filesystem (HDFS/S3A/local), not just java.io-visible
+    * paths. */
   def latestWatermarks(spark: SparkSession, outDir: String,
                        below: Option[Long] = None)
       : Option[org.apache.spark.sql.DataFrame] = {
-    val base = new org.apache.hadoop.fs.Path(s"$outDir/watermarks")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val candidates =
-      if (!fs.exists(base)) Array.empty[Long]
-      else fs.listStatus(base)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-        .flatMap(st => scala.util.Try(st.getPath.getName.drop(1).toLong).toOption)
-        .filter(v => below.forall(v < _))
-        .sorted(Ordering[Long].reverse)
-    // probe _SUCCESS descending and stop at the first commit — one or two
-    // exists() calls instead of one per historical version (each is a
-    // HEAD request on an object store)
-    candidates
-      .find(v => fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/watermarks/v$v/_SUCCESS")))
-      .map(v => spark.read.parquet(s"$outDir/watermarks/v$v"))
+    val versions = watermarkLog(spark, outDir)
+    versions.latest(below.getOrElse(Long.MaxValue))
+      .map(v => spark.read.parquet(versions.path(v)))
   }
+
+  private def watermarkLog(spark: SparkSession, outDir: String) =
+    new BatchLog(spark, s"$outDir/watermarks", "v")
 
   /** Stream-stream interval join: pair each left event with right
     * events of the same key whose timestamp falls in
@@ -942,35 +897,21 @@ object IncrementalSync {
       .start()
   }
 
-  /** The Misra–Gries state as of (strictly before) `below`, newest
-    * surviving batch partition only — same retry-safe read rule as
-    * [[admissionIndex]]: a replayed batch must not read its own failed
-    * attempt's output. Returns an empty 2-col frame before any batch. */
+  /** The Misra–Gries state as of (strictly before) `below`: the newest
+    * committed `summary/batch=N` partition, the same retry-safe
+    * [[BatchLog]] rule as [[retryBacklog]] — a replayed batch must not
+    * read its own failed attempt's output. Returns an empty 2-col frame
+    * before any batch. */
   def mgState(spark: SparkSession, stateDir: String,
-              below: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dir = new java.io.File(s"$stateDir/summary")
-    if (!dir.exists()) return Seq.empty[(String, Long)].toDF("token", "est")
-    val all = spark.read.parquet(dir.toString).filter(col("batch") < below)
-    // partition discovery types small batch= values as INT
-    val latest = all.agg(max(col("batch")).cast("long")).collect().head
-    if (latest.isNullAt(0)) Seq.empty[(String, Long)].toDF("token", "est")
-    else all.filter(col("batch") === latest.getLong(0)).select("token", "est")
-  }
+              below: Long): org.apache.spark.sql.DataFrame =
+    new BatchLog(spark, s"$stateDir/summary", "batch=").read(below,
+      org.apache.spark.sql.types.StructType.fromDDL("token STRING, est BIGINT"))
 
   private def mgTotal(spark: SparkSession, stateDir: String,
-                      below: Long): Long = {
-    import org.apache.spark.sql.functions._
-    val dir = new java.io.File(s"$stateDir/totals")
-    if (!dir.exists()) return 0L
-    val rows = spark.read.parquet(dir.toString)
-      .filter(col("batch") < below)
-    val latest = rows.agg(max(col("batch")).cast("long")).collect().head
-    if (latest.isNullAt(0)) 0L
-    else rows.filter(col("batch") === latest.getLong(0))
-      .select("n_total").collect().head.getLong(0)
-  }
+                      below: Long): Long =
+    new BatchLog(spark, s"$stateDir/totals", "batch=").read(below,
+      org.apache.spark.sql.types.StructType.fromDDL("n_total BIGINT"))
+      .collect().headOption.fold(0L)(_.getLong(0))
 
   /** Streaming heavy hitters at constant state — the unbounded-stream
     * twin of `TextOps.heavyHittersOf`. Each micro-batch of (doc_id,
@@ -986,7 +927,7 @@ object IncrementalSync {
     * the exact thing Misra–Gries exists to avoid).
     *
     * Idempotency: state and output are per-batch partition OVERWRITES
-    * and every read is strictly-below-batchId on the newest surviving
+    * and every read is strictly-below-batchId on the newest committed
     * partition — a replayed batch recomputes identical state, the same
     * contract as [[admissionPipeline]]. */
   def heavyHitterStream(docs: org.apache.spark.sql.DataFrame,

@@ -467,11 +467,21 @@ class IncrementalSyncSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("retry batch replay is idempotent: same batchId, same inputs, same outputs") {
+  /** The state-dir forms every durable-state reader must accept: a plain
+    * path, and the same directory as a `file:` URI (the form an
+    * `hdfs://` or `s3a://` dir takes), with the test-name suffix. */
+  private def stateDirForms(name: String)
+      : Seq[(String, java.nio.file.Path => String)] = Seq(
+    (name, _.toString),
+    (name + " (file: URI state dir)", _.toUri.toString))
+
+  stateDirForms("retry batch replay is idempotent: same batchId, same " +
+      "inputs, same outputs").foreach { case (name, form) => test(name) {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val outDir = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-replay-st").toString
+    val stateRoot = java.nio.file.Files.createTempDirectory("graft-replay-st")
+    val stateDir = form(stateRoot)
     val succeeds = col("job_id") % 2 === 0
     def snapshot() = {
       val ok = spark.read.parquet(s"$outDir/succeeded").collect()
@@ -484,6 +494,7 @@ class IncrementalSyncSpec extends SparkSpec {
     val b0 = (1L to 6L).map(i => Job(i, 0, i, priority = 1, attempts = 0)).toDF()
     retryBatch(b0, 0L, stateDir, outDir, succeeds)
     val first = snapshot()
+    assert(first._2.map(_._1) == Seq(1L, 3L, 5L), "batch 0's backlog reads back")
     // a crash after batch 0 commits its sink but before the engine
     // records the offset replays the SAME batch: the strictly-below
     // backlog read (below=0 -> empty) and partition overwrites must
@@ -494,9 +505,39 @@ class IncrementalSyncSpec extends SparkSpec {
     retryBatch(spark.emptyDataset[Job].toDF(), 1L, stateDir, outDir, succeeds)
     val dead1 = spark.read.parquet(s"$outDir/dead")
     assert(dead1.count() == 0) // attempts=1 < 3, still retrying
-    val bl = retryBacklog(spark, stateDir, below = Long.MaxValue).collect()
+    def backlogNow() = retryBacklog(spark, stateDir, below = Long.MaxValue).collect()
       .map(r => r.getAs[Long]("job_id") -> r.getAs[Int]("attempts")).toMap
-    assert(bl == Map(1L -> 2, 3L -> 2, 5L -> 2))
+    assert(backlogNow() == Map(1L -> 2, 3L -> 2, 5L -> 2))
+    // a torn batch-1 backlog (no commit marker) is never read: the
+    // reader falls back to batch 0's committed backlog
+    java.nio.file.Files.delete(stateRoot.resolve("backlog/batch=1/_SUCCESS"))
+    assert(backlogNow() == Map(1L -> 1, 3L -> 1, 5L -> 1))
+  }}
+
+  test("retry backlog and Misra-Gries state lookups schedule no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val outDir = java.nio.file.Files.createTempDirectory("graft-lookup").toString
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-lookup-st").toString
+    val b0 = (1L to 6L).map(i => Job(i, 0, i, priority = 1, attempts = 0)).toDF()
+    retryBatch(b0, 0L, stateDir, outDir, col("job_id") % 2 === 0)
+    retryBatch(spark.emptyDataset[Job].toDF(), 1L, stateDir, outDir,
+      col("job_id") % 2 === 0)
+    Seq(("alpha", 3L), ("beta", 2L)).toDF("token", "est")
+      .write.parquet(s"$stateDir/summary/batch=0")
+    val ((backlog, mg), ledger) = graft.scale.JobLedger.measure(spark) {
+      (retryBacklog(spark, stateDir, below = 2L),
+        mgState(spark, stateDir, below = 2L))
+    }
+    assert(ledger.jobs.isEmpty,
+      s"the lookups scheduled ${ledger.jobs.size} jobs")
+    // the frames read the newest committed batches, and reading them
+    // does run jobs (the ledger sees this thread's work)
+    val (rows, control) = graft.scale.JobLedger.measure(spark)(
+      (backlog.collect().map(_.getAs[Long]("job_id")).sorted.toSeq,
+        mg.collect().map(_.getAs[String]("token")).sorted.toSeq))
+    assert(control.jobs.nonEmpty, "control: the ledger never saw the reads")
+    assert(rows == ((Seq(1L, 3L, 5L), Seq("alpha", "beta"))))
   }
 
   test("circuit breaker: opens at threshold, sheds while open, half-open probe decides") {
@@ -563,12 +604,14 @@ class IncrementalSyncSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming heavy hitters: merged Misra-Gries sketch keeps the " +
-    "one-sided error bound across batches at constant state") {
+  stateDirForms("streaming heavy hitters: merged Misra-Gries sketch keeps the " +
+    "one-sided error bound across batches at constant state")
+      .foreach { case (name, form) => test(name) {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-mg").toString
+    val root = java.nio.file.Files.createTempDirectory("graft-mg")
+    val dir = root.toString
     val k = 10
     val rng = new scala.util.Random(7)
     // three skewed batches with shifting hot sets: the true global
@@ -584,7 +627,8 @@ class IncrementalSyncSpec extends SparkSpec {
     val batches = Seq(mkBatch("alpha", 60), mkBatch("alpha", 50), mkBatch("beta", 70))
     val input = MemoryStream[(Long, String)]
     val q = heavyHitterStream(
-      input.toDS().toDF("doc_id", "text"), s"$dir/state", s"$dir/out", k)
+      input.toDS().toDF("doc_id", "text"), form(root.resolve("state")),
+      s"$dir/out", k)
     try {
       batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
       val exact = batches.flatten
@@ -611,7 +655,7 @@ class IncrementalSyncSpec extends SparkSpec {
       // the hot tokens of EARLY batches are still present at the end
       assert(sketch.keys.exists(_.startsWith("alpha")))
     } finally q.stop()
-  }
+  }}
 
   test("cadence plan: 28 days, weekly fulls, dry-run gate on day one only") {
     import org.apache.spark.sql.functions._

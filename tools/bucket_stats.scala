@@ -1,18 +1,13 @@
 // Dev diagnostic: LSH bucket-size distribution for a list of data dirs.
 // Run with:  scala -cp target/scala-2.13/classes:/opt/spark/jars/'*' tools/bucket_stats.scala <dir> [<dir>...]
 // or compile ad hoc; not part of the shipping library (lives in tools/ on purpose).
+// The session is graft.Session.local() (SPARK_GRAFT_CPUS sets local[N]).
 import org.apache.spark.sql.functions._
 
 object BucketStats {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.01")
-    val sp = org.apache.spark.sql.SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-      .getOrCreate()
-    sp.sparkContext.setLogLevel("ERROR")
+    val sp = graft.Session.local()
     for (dir <- dirs) {
       val v = graft.Tables.embeddings(sp, dir)
         .select(col("vec_id"), graft.ml.Dedup.quantized(col("embedding")).as("q"))
