@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   * Views are lazy logical plans, not materializations: a SQL query over
   * `recon_categories` compiles into the SAME Catalyst plan as the
   * DataFrame form (one full-outer join), with filters and projections
-  * pushed through the view into the scans. Registering costs nothing
-  * at any scale.
+  * pushed through the view into the scans. Registering runs no Spark
+  * job (the tables' schemas come from their footers, see [[Tables]]) and
+  * costs nothing at any scale.
   */
 object SqlViews {
 

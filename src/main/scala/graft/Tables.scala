@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftops.FooterBridge
 
 /** Parquet table readers over the driver's synthetic star schema
   * (see /root/repo/TESTDATA.md). Every query receives the scale-factor
@@ -9,10 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale notes: at 100 TB these reads become partitioned scans; all
   * downstream operators filter/project before shuffling so Catalyst can
   * push predicates and prune columns into the scan.
+  *
+  * Schemas: [[load]] reads with the schema of the one footer Spark's own
+  * inference would pick, read and converted on the driver
+  * ([[FooterBridge]]), so no read runs a Spark job and the schema equals
+  * `spark.read.parquet(path).schema`. Nothing is cached: each call reads
+  * the path's current footer, so a rewritten table reads its new schema.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // no footer (a missing path, a directory without data files): Spark's
+    // own read raises its error
+    FooterBridge.schema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** events.parquet's `ts` has shipped as both TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) across driver revisions, so
@@ -25,8 +37,8 @@ object Tables {
     * wall-clock time, matching DuckDB's naive timestamps in the oracles.
     *
     * The nanos conf must be set AT SESSION BUILD (as SparkSpec/Bench/
-    * Verify do): the parquet reader consults it both at schema inference
-    * and at physical planning, so a set-and-restore around the read would
+    * Verify do): it is read both by the footer converter in [[load]] and
+    * at physical planning, so a set-and-restore around the read would
     * leak order dependence. With a MICROS file the conf is simply inert. */
   val NanosAsLongConf = "spark.sql.legacy.parquet.nanosAsLong"
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {

@@ -18,7 +18,10 @@ import graft.Session
   * `queryExecution.toRdd`, analysis through physical planning (under AQE
   * it also runs the shuffle stages); `exec` is the `count()` on it. The
   * three need three different fixes. `jobs` counts every job of the pass
-  * ([[JobLedger]]).
+  * ([[JobLedger]]). A run of several queries ends with one
+  * `TOTAL jobs=<n>` line, the jobs of all its passes: with
+  * SPARK_GRAFT_PASSES=1 and SPARK_GRAFT_ONLY unset, the registry's cold
+  * job census.
   *
   * The last pass of each query also prints its 20 slowest jobs, each with
   * its 3 slowest stages, and walks the executed plan (through query
@@ -32,8 +35,9 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val spark = Session.local()
     spark.range(1000000L).selectExpr("sum(id * 2)").collect()
-    for ((name, fn) <- Session.selected().toSeq.sortBy(_._1);
-         p <- 1 to Session.passes) {
+    val queries = Session.selected().toSeq.sortBy(_._1)
+    var total = 0
+    for ((name, fn) <- queries; p <- 1 to Session.passes) {
       val ((df, t), ledger) = JobLedger.measure(spark) {
         val t0 = System.nanoTime()
         val df = fn(spark, Session.sfDir)
@@ -46,6 +50,7 @@ object Probe {
       def s(from: Int, to: Int) = (t(to) - t(from)) / 1e9
       println(f"PASS $name $p ${s(0, 3)}%.2f construct=${s(0, 1)}%.2f " +
         f"plan=${s(1, 2)}%.2f exec=${s(2, 3)}%.2f jobs=${ledger.jobs.size}")
+      total += ledger.jobs.size
       if (p == Session.passes) {
         printJobs(ledger)
         walk(df.queryExecution.executedPlan, 0,
@@ -53,6 +58,7 @@ object Probe {
       }
       Session.cleanup(spark, df)
     }
+    if (queries.size > 1) println(s"TOTAL jobs=$total")
     spark.stop()
   }
 

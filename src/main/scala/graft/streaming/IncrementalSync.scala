@@ -777,14 +777,18 @@ object IncrementalSync {
     * torn write is never picked up), optionally only versions strictly
     * below `below`. Listed through [[BatchLog]], so outDir may live on
     * any Hadoop filesystem (HDFS/S3A/local), not just java.io-visible
-    * paths. */
+    * paths. Read with the schema [[syncPipeline]] writes, so the lookup
+    * runs no Spark job. */
   def latestWatermarks(spark: SparkSession, outDir: String,
                        below: Option[Long] = None)
       : Option[org.apache.spark.sql.DataFrame] = {
     val versions = watermarkLog(spark, outDir)
     versions.latest(below.getOrElse(Long.MaxValue))
-      .map(v => spark.read.parquet(versions.path(v)))
+      .map(v => spark.read.schema(WatermarkSchema).parquet(versions.path(v)))
   }
+
+  private val WatermarkSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "tenant_id BIGINT, case_ref BIGINT, last_serialno BIGINT")
 
   private def watermarkLog(spark: SparkSession, outDir: String) =
     new BatchLog(spark, s"$outDir/watermarks", "v")

@@ -58,3 +58,40 @@ object ListenerBridge {
   def drain(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(30000L)
 }
+
+/** Spark's parquet schema resolution without its inference job, for
+  * [[graft.Tables.load]]. Spark's non-merging rule
+  * (`ParquetUtils.inferSchema`) reads exactly one footer, picked over
+  * Spark's own file listing in path order: `_common_metadata`, else
+  * `_metadata`, else the first data file. It reads that footer inside a
+  * one-task job; this reads the same footer on the driver and converts it
+  * the same way (Spark's row metadata when present, else the session's
+  * conversion confs). `None` when there is no footer to read: a missing
+  * path or a directory without data files. */
+object FooterBridge {
+  import org.apache.hadoop.fs.Path
+  import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+    ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  def schema(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[StructType] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val files = new InMemoryFileIndex(session, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    // with neither summary file present, the head is the first data file
+    named("_common_metadata").orElse(named("_metadata")).orElse(files.headOption)
+      .map { f =>
+        val conf = session.sessionState.newHadoopConf()
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(session.sessionState.conf))
+      }
+  }
+}

@@ -525,9 +525,12 @@ class IncrementalSyncSpec extends SparkSpec {
       col("job_id") % 2 === 0)
     Seq(("alpha", 3L), ("beta", 2L)).toDF("token", "est")
       .write.parquet(s"$stateDir/summary/batch=0")
-    val ((backlog, mg), ledger) = graft.scale.JobLedger.measure(spark) {
+    Seq((1L, 7L, 4L)).toDF("tenant_id", "case_ref", "last_serialno")
+      .write.parquet(s"$outDir/watermarks/v0")
+    val ((backlog, mg, marks), ledger) = graft.scale.JobLedger.measure(spark) {
       (retryBacklog(spark, stateDir, below = 2L),
-        mgState(spark, stateDir, below = 2L))
+        mgState(spark, stateDir, below = 2L),
+        latestWatermarks(spark, outDir).get)
     }
     assert(ledger.jobs.isEmpty,
       s"the lookups scheduled ${ledger.jobs.size} jobs")
@@ -535,9 +538,10 @@ class IncrementalSyncSpec extends SparkSpec {
     // does run jobs (the ledger sees this thread's work)
     val (rows, control) = graft.scale.JobLedger.measure(spark)(
       (backlog.collect().map(_.getAs[Long]("job_id")).sorted.toSeq,
-        mg.collect().map(_.getAs[String]("token")).sorted.toSeq))
+        mg.collect().map(_.getAs[String]("token")).sorted.toSeq,
+        marks.as[(Long, Long, Long)].collect().toSeq))
     assert(control.jobs.nonEmpty, "control: the ledger never saw the reads")
-    assert(rows == ((Seq(1L, 3L, 5L), Seq("alpha", "beta"))))
+    assert(rows == ((Seq(1L, 3L, 5L), Seq("alpha", "beta"), Seq((1L, 7L, 4L)))))
   }
 
   test("circuit breaker: opens at threshold, sheds while open, half-open probe decides") {
