@@ -17,36 +17,37 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Reconcile.summary(spark, "/root/testdata/sf0.001")
 
+  /** THE registry module list: each module's (queries, oracles) pair.
+    * [[queries]], [[oracleSql]] and RegistrySpec's uniqueness check all
+    * read it. */
+  private[graft] def modules
+      : Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
+    ReconcileQueries.queries -> ReconcileQueries.oracles,
+    graft.sync.Ivm.queries -> graft.sync.Ivm.oracles,
+    DashboardQueries.queries -> DashboardQueries.oracles,
+    graft.expr.ExprQueries.queries -> graft.expr.ExprQueries.oracles,
+    graft.pipeline.CaseDocs.queries -> graft.pipeline.CaseDocs.oracles,
+    graft.ml.TextOps.queries -> graft.ml.TextOps.oracles,
+    graft.ml.Dedup.queries -> graft.ml.Dedup.oracles,
+    graft.ml.Similarity.queries -> graft.ml.Similarity.oracles,
+    graft.ml.Retrieval.queries -> graft.ml.Retrieval.oracles,
+    graft.ml.RagFlagship.queries -> graft.ml.RagFlagship.oracles,
+    graft.ml.Curation.queries -> graft.ml.Curation.oracles,
+    graft.ml.Multimodal.queries -> graft.ml.Multimodal.oracles,
+    graft.ml.EntityResolution.queries -> graft.ml.EntityResolution.oracles,
+    graft.pipeline.Enricher.queries -> graft.pipeline.Enricher.oracles,
+    graft.operators.Temporal.queries -> graft.operators.Temporal.oracles,
+    graft.operators.Graph.queries -> graft.operators.Graph.oracles,
+    graft.operators.Layout.queries -> graft.operators.Layout.oracles,
+    graft.streaming.IncrementalSync.queries -> graft.streaming.IncrementalSync.oracles,
+    graft.pipeline.Lineage.queries -> graft.pipeline.Lineage.oracles,
+    graft.pipeline.Takedown.queries -> graft.pipeline.Takedown.oracles,
+    graft.plans.DataQuality.queries -> graft.plans.DataQuality.oracles)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ReconcileQueries.queries ++ graft.sync.Ivm.queries ++
-      DashboardQueries.queries ++
-      graft.expr.ExprQueries.queries ++ graft.pipeline.CaseDocs.queries ++
-      graft.ml.TextOps.queries ++ graft.ml.Dedup.queries ++
-      graft.ml.Similarity.queries ++ graft.ml.Retrieval.queries ++
-      graft.ml.RagFlagship.queries ++
-      graft.ml.Curation.queries ++ graft.ml.Multimodal.queries ++
-      graft.ml.EntityResolution.queries ++
-      graft.pipeline.Enricher.queries ++ graft.operators.Temporal.queries ++
-      graft.operators.Graph.queries ++ graft.operators.Layout.queries ++
-      graft.streaming.IncrementalSync.queries ++
-      graft.pipeline.Lineage.queries ++ graft.pipeline.Takedown.queries ++
-      graft.plans.DataQuality.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ReconcileQueries.oracles ++ graft.sync.Ivm.oracles ++
-      DashboardQueries.oracles ++
-      graft.expr.ExprQueries.oracles ++ graft.pipeline.CaseDocs.oracles ++
-      graft.ml.TextOps.oracles ++ graft.ml.Dedup.oracles ++
-      graft.ml.Similarity.oracles ++ graft.ml.Retrieval.oracles ++
-      graft.ml.RagFlagship.oracles ++
-      graft.ml.Curation.oracles ++ graft.ml.Multimodal.oracles ++
-      graft.ml.EntityResolution.oracles ++
-      graft.pipeline.Enricher.oracles ++ graft.operators.Temporal.oracles ++
-      graft.operators.Graph.oracles ++ graft.operators.Layout.oracles ++
-      graft.streaming.IncrementalSync.oracles ++
-      graft.pipeline.Lineage.oracles ++ graft.pipeline.Takedown.oracles ++
-      graft.plans.DataQuality.oracles
+  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

@@ -412,77 +412,6 @@ object QuantizeVec {
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
 }
 
-/** 64-bit SimHash of a token array in one pass: per-token
-  * xxhash64(token, seed=42) — bit-identical to Spark's `xxhash64` via the
-  * same XXH64 kernel — then per-bit ±1 votes and a sign take. Replaces
-  * explode + a 64-conditional-sum aggregate (a full shuffle of every
-  * token) with a narrow per-row loop. */
-case class SimhashSig(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"simhash_sig expects array<string>, got ${other.sql}")
-    }
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      // null elements carry no vote (public Column API — the input array
-      // type may declare containsNull)
-      if (!arr.isNullAt(i)) {
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUTF8String(arr.getUTF8String(i), 42L)
-        var b = 0
-        while (b < 64) {
-          votes(b) += (((h >>> b) & 1L).toInt << 1) - 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) sig |= 1L << b; b += 1 }
-    sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val votes = ctx.freshName("votes")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $votes = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) continue;
-         |  long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |    .hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $votes[$b] += ((int) (($h >>> $b) & 1L) << 1) - 1;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($votes[$b] > 0) $sig |= 1L << $b;
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashSig =
-    copy(child = newChild)
-}
-
 /** 64-bit SimHash of a token array where every bit is derived from the
   * ENGINE-PORTABLE char-level polynomial token hash (same base-31 mod-1e9+7
   * fold as [[ShinglePoly3]]): bit b's vote for a token with hash h is the
@@ -494,8 +423,8 @@ case class SimhashSig(child: Expression) extends UnaryExpression {
   * every bit's sum toward zero, and near-dup hamming distances inflate
   * ~2x (measured 14 vs 7 on DedupSpec's crafted docs). Squaring h mod P
   * breaks the linear structure. A SQL oracle replays the signature
-  * bit-for-bit with list_reduce + modular arithmetic — unlike
-  * [[SimhashSig]]'s XXH64, which has no DuckDB twin. One generated pass
+  * bit-for-bit with list_reduce + modular arithmetic (an XXH64 token
+  * hash would have no DuckDB twin). Null tokens carry no vote. One generated pass
   * per row; h < 2^30 so h² < 2^60, no overflow in either engine. */
 case class SimhashPolySig(child: Expression) extends UnaryExpression {
 
@@ -995,10 +924,6 @@ object ArrayOps {
   /** Column wrapper: one-pass L2-normalize + integer quantize (codegen'd). */
   def quantize_vec(v: Column, scale: Int): Column =
     ColumnBridge.column(QuantizeVec(ColumnBridge.expression(v), scale))
-
-  /** Column wrapper: one-pass 64-bit SimHash of a token array (codegen'd). */
-  def simhash_sig(tokens: Column): Column =
-    ColumnBridge.column(SimhashSig(ColumnBridge.expression(tokens)))
 
   /** Column wrapper: one-pass PORTABLE-hash 64-bit SimHash (codegen'd). */
   def simhash_poly_sig(tokens: Column): Column =

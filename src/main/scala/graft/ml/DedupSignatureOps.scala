@@ -156,8 +156,7 @@ private[graft] trait DedupSignatureOps extends DedupShingleOps {
     * no shuffle of exploded tokens at all. The token hash is the
     * ENGINE-PORTABLE char-level polynomial fold (mod 1e9+7) with parity
     * bit-planes, so the registered pairs query carries a full DuckDB
-    * oracle; the XXH64 variant (ArrayOps.simhash_sig) remains for callers
-    * who prefer the stronger mixing over portability. */
+    * oracle. */
   def simhashOf(docs: DataFrame): DataFrame =
     graft.scale.Scale.spread(docs) // spread the sig kernel
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))

@@ -96,41 +96,12 @@ object RagFlagship {
     // -- stage 2: lexical arm (two-phase exact, derived terms) ---------
     // candidates: BM25 + the proximity upper bound; two consumers
     // (θ seed + survivor filter) -> cache
-    val cand = Retrieval.bm25PerQueryOf(tdocs, qk)
-      .withColumn("ub_milli", col("bm25_milli") +
-        when(col("n_terms") >= 2, lit(TextOps.ProxCapMilli))
-          .otherwise(lit(0L)))
+    val cand = TextOps.withUpperBound(Retrieval.bm25PerQueryOf(tdocs, qk))
       .persist()
-    // positional phase: THE shared panel kernel
-    // ([[TextRetrievalOps.panelMinDists]] — linear adjacent-pair lag
-    // window; the equivalence proof and the bounded-broadcast contract
-    // live there), with the mined keyword table as the membership frame
-    // and no literal prune (terms are data-derived). The quadratic
-    // self-join this replaced was the measured hot spot here: θ prunes
-    // weakly on common-term queries (thousands of survivors — honest
-    // WAND behavior), and the swap took the flagship ~19 s → ~13 s
-    // steady at sf0.1, value-identical.
-    def fullFor(c: DataFrame, bounded: Boolean): DataFrame =
-      c.join(TextOps.panelMinDists(tdocs, qk, Nil, c, bounded),
-          Seq("query_id", "doc_id"), "left")
-        .select(col("query_id"), col("doc_id"),
-          (col("bm25_milli") +
-            coalesce(expr(s"${TextOps.ProxNumMilli} div (1 + mindist)"),
-              lit(0L))).as("full_milli"))
-    val wUb = Window.partitionBy(col("query_id"))
-      .orderBy(col("ub_milli").desc, col("doc_id").asc)
-    val seeds = cand.withColumn("rn", row_number().over(wUb))
-      .filter(col("rn") <= ArmDepth).drop("rn")
-    val theta = fullFor(seeds, bounded = true).groupBy("query_id")
-      .agg(min(col("full_milli")).as("theta_milli"))
-    val survivors = cand.join(broadcast(theta), "query_id")
-      .filter(col("ub_milli") >= col("theta_milli"))
-    val wFull = Window.partitionBy(col("query_id"))
-      .orderBy(col("full_milli").desc, col("doc_id").asc)
-    val lexTop = fullFor(survivors, bounded = false)
-      .withColumn("lex_rank", row_number().over(wFull))
-      .filter(col("lex_rank") <= ArmDepth)
-      .select(col("query_id"), col("doc_id"), col("lex_rank"))
+    // THE shared per-query θ-rerank ([[TextRetrievalOps.proxTopKOf]]),
+    // with the mined keyword table as each query's term set
+    val lexTop = TextOps.proxTopKOf(tdocs, qk, cand, ArmDepth)
+      .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
 
     // -- stage 3: semantic arm ------------------------------------------
     val semTop = Similarity.bruteForceTopKOf(

@@ -100,36 +100,23 @@ object Retrieval {
   }
 
   /** BM25 of every corpus document against each query's term set (the
-    * same Lucene-idf fixed-point chain as [[TextOps.bm25Of]], with the
+    * shared [[TextOps.bm25Scores]] chain, with [[TextOps.bm25Of]]'s
     * literal `isin` prune generalized to a broadcast semi-join because
     * the term set is data-derived). The query document itself is
     * excluded from its own candidates. */
   def bm25PerQueryOf(tdocs: DataFrame, qterms: DataFrame): DataFrame = {
-    val stats = tdocs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("n_toks"))
-      .select(col("n_docs"), expr("n_toks * 1000 div n_docs").as("avgdl_milli"))
     val termSet = qterms.select("token").distinct()
     val tf = tdocs
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
       .join(broadcast(termSet), "token")
       .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
-    tf.join(broadcast(qterms), "token")
-      .filter(col("doc_id") =!= col("query_id"))
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", "tf",
-        s"${TextOps.log2mExpr("2 * n_docs + 2")}" +
-          s" - (${TextOps.log2mExpr("2 * df + 1")}) AS idf_milli",
-        "tf * 1000 + 1200 * (250 + 750 * (dl * 1000000 div avgdl_milli) div 1000)" +
-          " div 1000 AS den_milli")
-      .selectExpr("query_id", "doc_id",
-        "idf_milli * (tf * 2200 * 1000 div den_milli) div 1000 AS contrib_milli")
-      .groupBy("query_id", "doc_id")
-      // n_terms (distinct query terms present) rides along so two-phase
-      // consumers (the RAG flagship) can build the proximity upper bound
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_milli")).as("bm25_milli"))
+    // n_terms (distinct query terms present) rides along so two-phase
+    // consumers (the RAG flagship) can build the proximity upper bound
+    TextOps.bm25Scores(
+      tf.join(broadcast(qterms), "token")
+        .filter(col("doc_id") =!= col("query_id")),
+      TextOps.docFreqOf(tf), TextOps.corpusStatsOf(tdocs),
+      Seq("query_id", "doc_id"))
   }
 
   /** Library surface: RRF-fused hybrid top-k. `docs` = (doc_id, text),

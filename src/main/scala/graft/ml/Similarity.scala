@@ -20,10 +20,13 @@ import graft.functions.ArrayOps
   * to same-bucket vectors (equi-join on bucket id), which is the standard
   * first cut for ANN at 100 TB corpus scale. Both rerank identically.
   *
-  * Cache contract: [[ivfTopK]], [[labelOutliers]],
-  * [[tenantAnnCandidatesOf]] and [[tenantIvfCandidatesOf]] persist()
-  * load-bearing intermediates that the RETURNED lazy plan still
-  * references, so they cannot unpersist before the caller's action. In a long-lived session the
+  * Cache contract: [[ivfIndex]] persists the quantized corpus and its
+  * trained quantizer for its callers [[ivfTopK]], [[tenantIvfCandidatesOf]],
+  * [[ivfSplitListsOf]], [[ivfSplitMaintenanceOf]], [[ivfTakedownAuditOf]]
+  * and [[semanticPruneOf]]; those, [[ivfAppendAuditOf]], [[labelOutliers]]
+  * and [[tenantAnnCandidatesOf]] persist() load-bearing intermediates
+  * that the RETURNED lazy plan still references, so they cannot
+  * unpersist before the caller's action. In a long-lived session the
   * caller must release them after its final action
   * (`spark.catalog.clearCache()`, as Bench/Verify do between queries) or
   * the cached blocks accumulate across queries.
@@ -390,10 +393,7 @@ object Similarity {
     * tenant's slices of its probed lists. */
   def tenantIvfCandidatesOf(vectors: DataFrame): DataFrame = {
     val tenants = vectors.select(col("vec_id"), col("tenant_id"))
-    val v = graft.scale.Scale.spread(
-      vectors.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q")))
-      .persist()
-    val cents = trainedCentroids(v).persist()
+    val (v, cents) = ivfIndex(vectors)
     val lists = assignTo(v, cents, probes = 1)
       .join(tenants, "vec_id")
       .select(col("tenant_id"), col("centroid_id"), col("vec_id"), col("q"))
@@ -475,88 +475,106 @@ object Similarity {
       .select(col("vec_id").as("centroid_id"), col("q").as("cv"))
   }
 
-  /** Spherical k-means refinement, DataFrame-native: assign each vector
-    * to its max-dot centroid (broadcast join + windowed argmax), then
-    * recompute each centroid as the re-normalized element-wise mean of
-    * its members (posexplode -> per-(centroid,dim) SUM -> re-quantize).
-    * Integer-exactness: normalizing the member-sum vector equals
-    * normalizing the mean vector (the 1/n scale cancels), so the
-    * refinement aggregates exact longs — no FP-order-sensitive avg()
-    * anywhere — and the whole seed -> refine -> assign pipeline is
-    * reproducible in any engine (see [[ivfOracle]]).
-    * Every step is a bounded shuffle; centroids stay broadcast-sized.
-    * Training touches only a deterministic sample (vec_id stride — the
-    * k-means objective barely moves, the pass cost drops by the stride);
-    * only the FINAL assignment pass in [[ivfTopK]] reads the full
-    * corpus. Seeds still come from the full corpus so the centroid count
-    * is independent of the training stride. */
+  /** The trained coarse quantizer: stride seeds, then `iters` rounds of
+    * spherical k-means ([[lloyd]] with max-dot assignment) on a
+    * deterministic 1-in-[[IvfTrainStride]] sample. The new centroid is
+    * the re-quantized member SUM: normalizing the sum equals normalizing
+    * the mean (the 1/n scale cancels), so the refinement aggregates
+    * exact longs and replays in any engine (see [[ivfOracle]]). Seeds
+    * come from the full corpus, so the centroid count is independent of
+    * the training stride. */
   private def trainedCentroids(v: DataFrame, iters: Int = IvfIters): DataFrame = {
-    var cents = seedCentroids(v)
-    val sample = v.filter(col("vec_id") % IvfTrainStride === 0)
-    // vector width for the wide refinement aggregation below — one
-    // bounded driver fold (the [[topDirection]] dim-probe convention;
-    // library callers train on arbitrary-width vectors, e.g. the 4-dim
-    // spec fixtures). Empty corpus: any width yields empty refinements.
+    // vector width for the wide refinement aggregation — one bounded
+    // driver fold (the [[topDirection]] dim-probe convention; library
+    // callers train on arbitrary-width vectors). Empty corpus: any width
+    // yields empty refinements.
     val dims = v.select(size(col("q")).as("d")).take(1)
       .headOption.map(_.getInt(0)).getOrElse(EmbDims)
-    for (_ <- 0 until iters) {
-      val members = assignTo(sample, cents, probes = 1)
-        .select(col("centroid_id"), col("q"))
-      // NB: refined below via left join so a centroid whose members all
-      // fell outside the training sample KEEPS its previous vector
-      // instead of silently vanishing — the centroid count must stay
-      // independent of the training stride
-      // one aggregation instead of posexplode -> per-(centroid,dim)
-      // groupBy -> collect_list/sort -> re-assemble (round-18, guide
-      // §1.2): the embedding width is the fixed EmbDims, so the
-      // element-wise sums are EmbDims ordinary map-side-combinable
-      // columns and the sum vector reassembles as an array literal —
-      // same exact longs into the same quantization, two fewer
-      // exchanges and no row multiplication.
-      val refined = members
-        .groupBy("centroid_id")
-        .agg(sum(element_at(col("q"), 1)).as("s0"),
-          (1 until dims).map(d =>
-            sum(element_at(col("q"), d + 1)).as(s"s$d")): _*)
-        .select(col("centroid_id"),
-          ArrayOps.quantize_vec(
-            array((0 until dims).map(d => col(s"s$d").cast("double")): _*),
-            10000).as("rcv"))
-      cents = cents
-        .join(refined, Seq("centroid_id"), "left_outer")
-        .select(col("centroid_id"), coalesce(col("rcv"), col("cv")).as("cv"))
+    lloyd(seedCentroids(v), v.filter(col("vec_id") % IvfTrainStride === 0),
+      "q", Nil, "centroid_id", dims, maxDot = true, iters)(sphericalCentre)
+  }
+
+  /** IVF centre update: the re-quantized member sum. */
+  private[ml] def sphericalCentre(sums: Seq[Column], n: Column): Column =
+    ArrayOps.quantize_vec(array(sums.map(_.cast("double")): _*), 10000)
+
+  /** PQ centre update: the rounded integer member mean (one rounding
+    * division per dimension, replayable in any engine). */
+  private[ml] def roundedMean(sums: Seq[Column], n: Column): Column =
+    array(sums.map(s => round(s.cast("double") / n).cast("long")): _*)
+
+  /** THE Lloyd trainer for every codebook in this module: `iters` rounds
+    * of assign-to-nearest ([[nearest]] over `sample`'s vector column `x`)
+    * followed by a per-(`keys`, `id`) member count and element-wise sum,
+    * from which `centre` builds each refined vector. `seeds` is
+    * (`keys`…, `id`, cv); so is the result. The refined vectors are
+    * LEFT-joined onto the previous round, so a centroid with no sample
+    * member keeps its previous vector instead of vanishing — the
+    * codebook size never depends on the sample. `dims` is the vector
+    * width: the sums are `dims` ordinary map-side-combinable columns
+    * reassembled as an array, one aggregation and no row
+    * multiplication. LloydPropSpec checks it against a driver-side
+    * reference over several rounds and both metrics. */
+  private[ml] def lloyd(seeds: DataFrame, sample: DataFrame, x: String,
+      keys: Seq[String], id: String, dims: Int, maxDot: Boolean, iters: Int)(
+      centre: (Seq[Column], Column) => Column): DataFrame = {
+    val cell = (keys :+ id).map(col)
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      val refined = nearest(sample, x, cents, keys, id, maxDot)
+        .groupBy(cell: _*)
+        .agg(count(lit(1)).as("n"), (0 until dims).map(d =>
+          sum(element_at(col(x), d + 1)).as(s"s$d")): _*)
+        .select(cell :+
+          centre((0 until dims).map(d => col(s"s$d")), col("n")).as("rcv"): _*)
+      cents.join(refined, keys :+ id, "left_outer")
+        .select(cell :+ coalesce(col("rcv"), col("cv")).as("cv"): _*)
     }
-    cents
+  }
+
+  /** Nearest centroid per row of `rows` as ONE generated pass
+    * ([[graft.functions.NearestVec]]) against the centroid table packed,
+    * per `keys` group, into an id-sorted broadcast array: adds `id` and
+    * its score `s` to `rows`' columns. `maxDot` picks max integer dot
+    * (IVF) or min squared L2 (PQ; the per-row constant ⟨x,x⟩ is dropped,
+    * which keeps order and ties); the id-sorted iteration with a strict
+    * compare breaks ties to the smallest id. Where the join against
+    * every centroid ROW would multiply the corpus by the codebook size
+    * and argmax through a hash aggregate, this visits the same centroids
+    * in place. A group with no centroids yields no row. */
+  private[ml] def nearest(rows: DataFrame, x: String, cents: DataFrame,
+      keys: Seq[String], id: String, maxDot: Boolean): DataFrame = {
+    val pack = cents.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col(id).as("id"), col("cv"))))
+        .as("cands"))
+    val out = rows.columns.toSeq.map(col)
+    rows.join(broadcast(pack), keys)
+      .select(out :+ ArrayOps.nearest_vec(col(x), col("cands"), maxDot)
+        .as("best"): _*)
+      // on the id: the optimizer infers that test anyway, and a struct
+      // test adds a second kernel call to the pushed-down join condition
+      .filter(col("best.id").isNotNull)
+      .select(out ++ Seq(col("best.id").as(id), col("best.s").as("s")): _*)
+  }
+
+  /** The IVF index every list-based arm builds on: the corpus quantized,
+    * spread and persisted as (vec_id, q), and its trained coarse
+    * quantizer (centroid_id, cv), persisted because the list build and
+    * the query probing both re-read it. [[ivfAppendAuditOf]] trains on
+    * its base split only and builds its own. */
+  private def ivfIndex(vectors: DataFrame): (DataFrame, DataFrame) = {
+    val v = graft.scale.Scale.spread(
+      vectors.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q")))
+      .persist()
+    (v, trainedCentroids(v).persist())
   }
 
   /** Assign each vector to its `probes` nearest centroids (by integer
-    * dot). The inverted-list assignment is a broadcast join + argmax —
-    * no shuffle of the corpus until the final grouping. probes == 1
-    * (the bulk corpus pass) is a hash aggregate with max_by, which
-    * skips the sort a windowed rank would pay; multi-probe (the small
-    * query side) keeps the windowed form. */
+    * dot). probes == 1 (the bulk corpus pass) is [[nearest]]; multi-probe
+    * (the small query side) keeps the windowed form. */
   private def assignTo(v: DataFrame, cents: DataFrame, probes: Int): DataFrame = {
     if (probes == 1) {
-      // single-probe bulk pass as ONE generated argmax per vector
-      // ([[graft.functions.NearestVec]], round 19) against the centroid
-      // table packed into a sorted broadcast array: the prior form
-      // cross-joined the corpus against every centroid ROW (~n·√n rows
-      // under the adaptive stride) and argmax'd with a max_by hash
-      // aggregate; the expression visits the same centroids in-place
-      // with zero intermediate rows and no aggregation. Identical
-      // assignment: sorted-by-id iteration with a strict > IS the
-      // (cdot desc, centroid_id asc) tie-break of the old
-      // max_by(_, struct(cdot, -centroid_id)); an empty centroid table
-      // yields an empty pack → the inner filter drops every row, the
-      // same empty output the cross join produced.
-      val pack = cents.agg(sort_array(collect_list(struct(
-        col("centroid_id").as("id"), col("cv")))).as("cands"))
-      val best = ArrayOps.nearest_vec(col("q"), col("cands"), maxDot = true)
-      v.join(broadcast(pack), lit(true))
-        .select(col("vec_id"), col("q"), best.as("best"))
-        .filter(col("best").isNotNull)
-        .select(col("vec_id"), col("q"),
-          col("best.id").as("centroid_id"), col("best.s").as("cdot"))
+      nearest(v, "q", cents, Nil, "centroid_id", maxDot = true)
+        .withColumnRenamed("s", "cdot")
     } else {
       val scored = v.join(broadcast(cents), lit(true))
         .select(col("vec_id"), col("q"), col("centroid_id"),
@@ -573,10 +591,7 @@ object Similarity {
     * reranked by exact integer dot. */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 10,
       pred: Column => Column = isQuery): DataFrame = {
-    val v = graft.scale.Scale.spread(quantizedVectors(spark, dir)).persist()
-    // trained (not just seeded) coarse quantizer; persist()ed because the
-    // list build and the query probing both re-read it
-    val cents = trainedCentroids(v).persist()
+    val (v, cents) = ivfIndex(Tables.embeddings(spark, dir))
     val lists = assignTo(v, cents, probes = 1)
       .select(col("centroid_id"), col("vec_id"), col("q"))
     val queryLists = assignTo(
@@ -711,15 +726,12 @@ object Similarity {
   /** Shared internals: frozen quantizer trained on `base`, full
     * assignment of base ∪ delta, 2× trigger, per-list split. */
   private def splitParts(base: DataFrame, delta: DataFrame): SplitParts = {
-    val vb = graft.scale.Scale.spread(
-      base.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q")))
-      .persist()
+    val (vb, cents) = ivfIndex(base)
     // the delta is an append batch, not a scan (the registered binding
     // derives it with a join), so Scale.spread's scan-only contract
     // excludes it — and an append batch is delta-sized, not
     // corpus-sized, so it needs no spreading
     val vd = delta.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q"))
-    val cents = trainedCentroids(vb).persist()
     val aa = assignTo(vb.unionByName(vd), cents, probes = 1).persist()
     val nLists = cents.agg(count(lit(1)).as("n_lists"))
     val nTotal = aa.agg(count(lit(1)).as("n_total"))
@@ -842,10 +854,7 @@ object Similarity {
     * own pass), one bounded per-list aggregate — the decision adds
     * nothing beyond a flag fold to the existing build shape. */
   def ivfTakedownAuditOf(vectors: DataFrame): DataFrame = {
-    val v = graft.scale.Scale.spread(
-      vectors.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q")))
-      .persist()
-    val cents = trainedCentroids(v).persist()
+    val (v, cents) = ivfIndex(vectors)
     val pl = assignTo(v, cents, probes = 1)
       .groupBy("centroid_id")
       .agg(count(lit(1)).as("m"),
@@ -903,10 +912,7 @@ object Similarity {
     * frame — SimilaritySpec plants near-identical vectors through this
     * form and proves they are clustered together and pruned. */
   def semanticPruneOf(vectors: DataFrame): DataFrame = {
-    val v = graft.scale.Scale.spread(
-      vectors.select(col("vec_id"), Dedup.quantized(col("embedding")).as("q")))
-      .persist()
-    val cents = trainedCentroids(v).persist()
+    val (v, cents) = ivfIndex(vectors)
     val lists = assignTo(v, cents, probes = 1)
       .select(col("centroid_id"), col("vec_id"), col("q"),
         ArrayOps.dot_long(col("q"), col("q")).as("nsq"))
@@ -1396,65 +1402,17 @@ object Similarity {
         slice(col("q"), m * PqSubDim + 1, PqSubDim).as("sq"))): _*)).as("e"))
       .select(col("vec_id"), col("e.sub").as("sub"), col("e.sq").as("sq"))
 
-  /** Nearest codeword per (vector, subspace) by squared L2 with the
-    * (distance asc, code asc) tie-break — as ONE generated argmin pass
-    * ([[graft.functions.NearestVec]], round 19) against the codebook
-    * packed into a per-subspace sorted array (8 broadcast rows). The
-    * prior form joined every (vector, subspace) slice against all
-    * [[PqCodebook]] codeword ROWS and argmin'd with a max_by hash
-    * aggregate — a corpus × 64 row multiplication (10M rows at 20k
-    * vectors) re-shuffled per training round AND per encode, where the
-    * expression visits the same codewords in-place. Identical codes:
-    * dropping the per-row constant ⟨x,x⟩ from the distance preserves
-    * order and ties (NearestVec doc), and the sorted-by-code iteration
-    * with a strict compare IS the (d2 asc, code asc) tie-break. */
-  private def pqAssign(subs: DataFrame, cents: DataFrame): DataFrame = {
-    val packs = cents.groupBy("sub")
-      .agg(sort_array(collect_list(struct(
-        col("code").as("id"), col("cv")))).as("cands"))
-    subs.join(broadcast(packs), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("sq"),
-        ArrayOps.nearest_vec(col("sq"), col("cands"), maxDot = false)
-          .getField("id").as("code"))
-      .filter(col("code").isNotNull)
-      .select(col("vec_id"), col("sub"), col("code"), col("sq"))
-  }
-
-  /** Codebooks after `iters` Lloyd rounds: assignment on the sample, then
-    * each codeword becomes the rounded integer mean of its members
-    * (per-(sub,code,dim) SUM + COUNT — map-side combined, exact longs;
-    * the single rounding division replays in any engine). A codeword
-    * with no sample members keeps its previous value, so the codebook
-    * size never shrinks. */
+  /** Codebooks after `iters` [[lloyd]] rounds per subspace: min-L2
+    * assignment on the sample, each codeword becoming the rounded
+    * integer mean of its members. */
   private def pqCodebooks(v: DataFrame, iters: Int = PqIters): DataFrame = {
     val subs = subVectors(v)
-    var cents = subs
+    val seeds = subs
       .filter(col("vec_id") % PqSeedStep === 0 &&
         col("vec_id") < PqSeedStep * PqCodebook)
       .select(col("sub"), col("vec_id").as("code"), col("sq").as("cv"))
-    val sample = subs.filter(col("vec_id") % PqTrainStride === 0)
-    for (_ <- 0 until iters) {
-      val members = pqAssign(sample, cents)
-      // one aggregation instead of posexplode -> per-(sub,code,dim)
-      // groupBy -> collect_list/sort -> re-assemble (round-18, guide
-      // §1.2 per-task work): PqSubDim is a compile-time constant, so the
-      // per-dim sums are PqSubDim ordinary map-side-combinable columns
-      // and the rounded mean vector reassembles as an array literal —
-      // same sums, same count, same rounding, two fewer exchanges.
-      val refined = members
-        .groupBy("sub", "code")
-        .agg(count(lit(1)).as("n"),
-          (0 until PqSubDim).map(d =>
-            sum(element_at(col("sq"), d + 1)).as(s"s$d")): _*)
-        .select(col("sub"), col("code"),
-          array((0 until PqSubDim).map(d =>
-            round(col(s"s$d").cast("double") / col("n")).cast("long")): _*)
-            .as("rcv"))
-      cents = cents
-        .join(refined, Seq("sub", "code"), "left_outer")
-        .select(col("sub"), col("code"), coalesce(col("rcv"), col("cv")).as("cv"))
-    }
-    cents
+    lloyd(seeds, subs.filter(col("vec_id") % PqTrainStride === 0), "sq",
+      Seq("sub"), "code", PqSubDim, maxDot = false, iters)(roundedMean)
   }
 
   /** ANN via PQ + asymmetric distance computation (ADC): the corpus is
@@ -1476,7 +1434,8 @@ object Similarity {
       pred: Column => Column = isQuery): DataFrame = {
     val v = graft.scale.Scale.spread(quantizedVectors(spark, dir)).persist()
     val cents = pqCodebooks(v).persist()
-    val codes = pqAssign(subVectors(v), cents)
+    val codes = nearest(subVectors(v), "sq", cents, Seq("sub"), "code",
+        maxDot = false)
       .select(col("vec_id"), col("sub"), col("code"))
     val qs = v.filter(pred(col("vec_id")))
     val lut = subVectors(qs)

@@ -51,6 +51,16 @@ import graft.Tables
   * forced hint — AQE broadcasts it when it measures small and falls
   * back to a shuffle join when it doesn't, instead of blowing the
   * driver's broadcast limit at scale.
+  *
+  * Two paths stay on purpose. The single-query form ([[proxRerankTopkOf]],
+  * [[proxRerankAuditOf]]) prunes with its literal terms and cuts with
+  * TakeOrdered; the per-query form ([[proxTopKOf]], shared by the panels
+  * and the RAG flagship) joins a query-term table and ranks in windows
+  * partitioned by query_id. Sending the single-query and literal-term
+  * scorers through the per-query path instead added Spark jobs at
+  * sf0.01: text_prox_rerank_topk 25 → 40, text_prox_rerank_audit
+  * 20 → 30, text_bm25_topk 8 → 11, the panels 38 → 40. Both paths score
+  * with the one BM25 chain, [[TextTokenOps.bm25Scores]].
   */
 private[graft] trait TextRetrievalOps extends TextTokenOps {
 
@@ -59,51 +69,31 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
   val ProxCapMilli = 1000L
   val ProxTopK = 20
 
-  /** Tokenize-once barrier: `(doc_id, toks, dl)` — the projection every
-    * retrieval stage reads (same shape as [[Retrieval.tokenizedOf]]).
-    * Callers persist() it; Bench/Verify's per-query clearCache releases
-    * it. */
-  private def tokenized(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-
-  /** 1-row (n_docs, avgdl_milli) off the tokenized projection. */
-  private def corpusStats(tdocs: DataFrame): DataFrame =
-    tdocs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("n_toks"))
-      .select(col("n_docs"), expr("n_toks * 1000 div n_docs").as("avgdl_milli"))
-
-  /** Per-candidate BM25 + upper bound for `terms` — one row per doc
-    * containing ≥ 1 query term: (doc_id, n_terms, bm25_milli, ub_milli).
-    * Arithmetic identical to [[bm25Of]] so the two rankings agree on the
-    * shared prefix of their formulas. */
-  private def candidateScores(tdocs: DataFrame, terms: Seq[String])
-      : DataFrame = {
-    val stats = corpusStats(tdocs)
-    val termArr = array(terms.map(lit): _*)
-    val tf = tdocs
-      // postings read: only docs containing a query term survive the
-      // scan; everything else is never exploded
-      .filter(arrays_overlap(col("toks"), termArr))
+  /** Postings of the LITERAL terms `terms` over a tokenized projection
+    * ([[Retrieval.tokenizedOf]]): (doc_id, dl, token, tf). Only docs
+    * containing a query term survive the scan (`arrays_overlap`, the
+    * postings read); everything else is never exploded. */
+  private def literalTf(tdocs: DataFrame, terms: Seq[String]): DataFrame =
+    tdocs
+      .filter(arrays_overlap(col("toks"), array(terms.map(lit): _*)))
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
       .filter(col("token").isin(terms: _*))
       .groupBy("doc_id", "dl", "token")
       .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
-    tf.join(broadcast(df), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("doc_id", "tf",
-        s"${log2mExpr("2 * n_docs + 2")} - (${log2mExpr("2 * df + 1")}) AS idf_milli",
-        "tf * 1000 + 1200 * (250 + 750 * (dl * 1000000 div avgdl_milli) div 1000)" +
-          " div 1000 AS den_milli")
-      .selectExpr("doc_id",
-        "idf_milli * (tf * 2200 * 1000 div den_milli) div 1000 AS contrib_milli")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_milli")).as("bm25_milli"))
-      .withColumn("ub_milli",
-        col("bm25_milli") +
-          when(col("n_terms") >= 2, lit(ProxCapMilli)).otherwise(lit(0L)))
+
+  /** Adds the proximity upper bound: BM25 plus the bonus cap, for docs
+    * with ≥ 2 distinct query terms (a single-term doc has no pair). */
+  private[ml] def withUpperBound(bm: DataFrame): DataFrame =
+    bm.withColumn("ub_milli", col("bm25_milli") +
+      when(col("n_terms") >= 2, lit(ProxCapMilli)).otherwise(lit(0L)))
+
+  /** Per-candidate BM25 + upper bound for `terms` — one row per doc
+    * containing ≥ 1 query term: (doc_id, n_terms, bm25_milli, ub_milli). */
+  private def candidateScores(tdocs: DataFrame, terms: Seq[String])
+      : DataFrame = {
+    val tf = literalTf(tdocs, terms)
+    withUpperBound(
+      bm25Scores(tf, docFreqOf(tf), corpusStatsOf(tdocs), Seq("doc_id")))
   }
 
   /** Min distance between occurrences of two DIFFERENT query terms, for
@@ -182,7 +172,7 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
   def proxRerankTopkOf(docs: DataFrame, terms: Seq[String],
       k: Int = ProxTopK): DataFrame = {
     // tokenize once for the stats, postings, and positional consumers
-    val tdocs = tokenized(docs).persist()
+    val tdocs = Retrieval.tokenizedOf(docs).persist()
     // two consumers (θ seed + survivor filter): cache the candidate
     // postings once (Bench/Verify's per-query clearCache releases it)
     val cand = candidateScores(tdocs, terms).persist()
@@ -204,7 +194,7 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
     * on empty input. */
   def proxRerankAuditOf(docs: DataFrame, terms: Seq[String],
       k: Int = ProxTopK): DataFrame = {
-    val tdocs = tokenized(docs).persist()
+    val tdocs = Retrieval.tokenizedOf(docs).persist()
     val cand = candidateScores(tdocs, terms).persist()
     val nDocs = tdocs.agg(count(lit(1)).as("n_docs"))
     cand
@@ -237,14 +227,13 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
     * window + groupBy per pair — two shuffles and a per-pair sort whose
     * input mass equals exactly the positions the expression now scans
     * in place (measured 3.3 s of e2e_rag_serving's 11.2 at sf0.1).
-    * `termPrune` (the literal-panel prune) is obsolete in this form —
-    * the membership test IS the per-row array filter — and is kept in
-    * the signature so the two callers and the property spec stay
-    * uniform. `bounded` marks a ≤ k·|panel| θ-seed set whose pair side
-    * is broadcast-hinted against the corpus (the corpus is never
-    * shuffled for it); a data-dependent survivor set is left to AQE. */
+    * The membership test IS the per-row array filter, so no literal
+    * term prune is needed here. `bounded` marks a ≤ k·|panel| θ-seed
+    * set whose pair side is broadcast-hinted against the corpus (the
+    * corpus is never shuffled for it); a data-dependent survivor set is
+    * left to AQE. */
   private[ml] def panelMinDists(tdocs: DataFrame, qterms: DataFrame,
-      termPrune: Seq[String], ids: DataFrame, bounded: Boolean): DataFrame = {
+      ids: DataFrame, bounded: Boolean): DataFrame = {
     val pairIds = ids.select("query_id", "doc_id").distinct()
     val qArr = qterms.groupBy("query_id")
       .agg(collect_list(col("token")).as("qts"))
@@ -282,36 +271,32 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
     val qterms = panel.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
       .toDF("query_id", "token")
     // tokenize once; the stats, postings, and positional scans share it
-    val tdocs = tokenized(docs).persist()
-    val stats = corpusStats(tdocs)
-    val termArr = array(allTerms.map(lit): _*)
+    val tdocs = Retrieval.tokenizedOf(docs).persist()
     // one postings scan for the whole panel
-    val tf = tdocs
-      .filter(arrays_overlap(col("toks"), termArr))
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
-      .filter(col("token").isin(allTerms: _*))
-      .groupBy("doc_id", "dl", "token")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
+    val tf = literalTf(tdocs, allTerms)
     // per-(query, doc) BM25 + upper bound; two consumers -> cache
-    val cand = tf.join(broadcast(df), "token")
-      .join(broadcast(qterms), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", "tf",
-        s"${log2mExpr("2 * n_docs + 2")} - (${log2mExpr("2 * df + 1")}) AS idf_milli",
-        "tf * 1000 + 1200 * (250 + 750 * (dl * 1000000 div avgdl_milli) div 1000)" +
-          " div 1000 AS den_milli")
-      .selectExpr("query_id", "doc_id",
-        "idf_milli * (tf * 2200 * 1000 div den_milli) div 1000 AS contrib_milli")
-      .groupBy("query_id", "doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_milli")).as("bm25_milli"))
-      .withColumn("ub_milli",
-        col("bm25_milli") +
-          when(col("n_terms") >= 2, lit(ProxCapMilli)).otherwise(lit(0L)))
+    val cand = withUpperBound(bm25Scores(tf.join(broadcast(qterms), "token"),
+        docFreqOf(tf), corpusStatsOf(tdocs), Seq("query_id", "doc_id")))
       .persist()
+    proxTopKOf(tdocs, qterms, cand, k)
+      .select("query_id", "doc_id", "n_terms", "bm25_milli",
+        "prox_bonus_milli", "full_milli")
+  }
 
+  /** THE per-query θ-rerank, shared by the literal panel above and
+    * [[RagFlagship]]'s lexical arm: `cand` is (query_id, doc_id, n_terms,
+    * bm25_milli, ub_milli) — persisted by the caller, as the θ seed and
+    * the survivor filter both read it — and `qterms` (query_id, token)
+    * each query's term set. Per query: the top-k docs by upper bound are
+    * the θ seed, θ is their k-th best full score, docs with ub < θ are
+    * pruned and the survivors are reranked by full score. Windows are
+    * partitioned by query_id, never global. Output: (query_id, doc_id,
+    * n_terms, bm25_milli, prox_bonus_milli, full_milli, rank), rank ≤ k
+    * per query. */
+  private[ml] def proxTopKOf(tdocs: DataFrame, qterms: DataFrame,
+      cand: DataFrame, k: Int): DataFrame = {
     def fullFor(c: DataFrame, bounded: Boolean): DataFrame =
-      c.join(panelMinDists(tdocs, qterms, allTerms, c, bounded),
+      c.join(panelMinDists(tdocs, qterms, c, bounded),
           Seq("query_id", "doc_id"), "left")
         .select(col("query_id"), col("doc_id"), col("n_terms"),
           col("bm25_milli"),
@@ -330,10 +315,8 @@ private[graft] trait TextRetrievalOps extends TextTokenOps {
     val wFull = Window.partitionBy(col("query_id"))
       .orderBy(col("full_milli").desc, col("doc_id").asc)
     fullFor(survivors, bounded = false)
-      .withColumn("rn", row_number().over(wFull))
-      .filter(col("rn") <= k)
-      .select("query_id", "doc_id", "n_terms", "bm25_milli",
-        "prox_bonus_milli", "full_milli")
+      .withColumn("rank", row_number().over(wFull))
+      .filter(col("rank") <= k)
   }
 
   /** Registered forms: the [[bm25]] query panel (one rare + two common

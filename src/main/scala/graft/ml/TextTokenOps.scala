@@ -436,30 +436,51 @@ private[graft] trait TextTokenOps {
     * post-prune volume is bounded by matches, not vocabulary. */
   def bm25Of(docs: DataFrame, queryTerms: Seq[String], topK: Int = 20): DataFrame = {
     val terms = queryTerms.distinct
-    val stats = docs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(size(tokens(col("text"))).cast("long")).as("n_toks"))
-      .select(col("n_docs"), expr("n_toks * 1000 div n_docs").as("avgdl_milli"))
+    val stats = corpusStatsOf(
+      docs.select(size(tokens(col("text"))).cast("long").as("dl")))
     val tf = docs
       .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"),
         explode(tokens(col("text"))).as("token"))
       .filter(col("token").isin(terms: _*))
       .groupBy("doc_id", "dl", "token")
       .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
-    tf.join(broadcast(df), "token")
-      .crossJoin(broadcast(stats))
-      .selectExpr("doc_id", "tf",
-        s"${log2mExpr("2 * n_docs + 2")} - (${log2mExpr("2 * df + 1")}) AS idf_milli",
-        "tf * 1000 + 1200 * (250 + 750 * (dl * 1000000 div avgdl_milli) div 1000)" +
-          " div 1000 AS den_milli")
-      .selectExpr("doc_id",
-        "idf_milli * (tf * 2200 * 1000 div den_milli) div 1000 AS contrib_milli")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_milli")).as("bm25_milli"))
+    bm25Scores(tf, docFreqOf(tf), stats, Seq("doc_id"))
       .orderBy(col("bm25_milli").desc, col("doc_id").asc)
       .limit(topK)
   }
+
+  /** 1-row (n_docs, avgdl_milli) over a frame with one row per document
+    * and its token count `dl` — the corpus statistics of every BM25
+    * scorer. */
+  private[ml] def corpusStatsOf(tdocs: DataFrame): DataFrame =
+    tdocs.agg(
+      count(lit(1)).as("n_docs"),
+      sum(col("dl")).as("n_toks"))
+      .select(col("n_docs"), expr("n_toks * 1000 div n_docs").as("avgdl_milli"))
+
+  /** (token, df): the number of documents holding each term of a
+    * (…, doc_id, token, tf) postings frame. */
+  private[ml] def docFreqOf(tf: DataFrame): DataFrame =
+    tf.groupBy("token").agg(count(lit(1)).cast("long").as("df"))
+
+  /** THE BM25 fixed-point chain (idf, length-normalized tf, per-term
+    * contribution, sum) shared by every lexical scorer: `tf` holds
+    * (`keys`…, dl, token, tf) postings, `df` (token, df) and `stats` is
+    * [[corpusStatsOf]]. One row per `keys` value with ≥ 1 posting:
+    * (`keys`…, n_terms, bm25_milli); n_terms counts the distinct query
+    * terms present, which the proximity upper bound reads. */
+  private[ml] def bm25Scores(tf: DataFrame, df: DataFrame, stats: DataFrame,
+      keys: Seq[String]): DataFrame =
+    tf.join(broadcast(df), "token")
+      .crossJoin(broadcast(stats))
+      .selectExpr(keys ++ Seq("tf",
+        s"${log2mExpr("2 * n_docs + 2")} - (${log2mExpr("2 * df + 1")}) AS idf_milli",
+        "tf * 1000 + 1200 * (250 + 750 * (dl * 1000000 div avgdl_milli) div 1000)" +
+          " div 1000 AS den_milli"): _*)
+      .selectExpr(keys :+
+        "idf_milli * (tf * 2200 * 1000 div den_milli) div 1000 AS contrib_milli": _*)
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_milli")).as("bm25_milli"))
 
   /** Registered form: one rare term ("dup", df ≈ 5% of docs) and two
     * common ones — exercises both ends of the idf range. */

@@ -40,19 +40,7 @@ class RegistrySpec extends SparkSpec {
   test("query names are unique across modules") {
     // queries is built by ++ over module maps — a duplicated name would
     // silently shadow an earlier module's query
-    val all = Seq(
-      graft.sync.ReconcileQueries.queries, graft.metrics.DashboardQueries.queries,
-      graft.expr.ExprQueries.queries, graft.pipeline.CaseDocs.queries,
-      graft.ml.TextOps.queries, graft.ml.Dedup.queries,
-      graft.ml.Similarity.queries, graft.ml.Retrieval.queries,
-      graft.ml.RagFlagship.queries,
-      graft.ml.Curation.queries, graft.ml.Multimodal.queries,
-      graft.ml.EntityResolution.queries,
-      graft.pipeline.Enricher.queries, graft.operators.Temporal.queries,
-      graft.operators.Graph.queries, graft.operators.Layout.queries,
-      graft.streaming.IncrementalSync.queries, graft.pipeline.Lineage.queries,
-      graft.pipeline.Takedown.queries, graft.sync.Ivm.queries,
-      graft.plans.DataQuality.queries)
+    val all = SparkEntry.modules.map(_._1)
     val names = all.flatMap(_.keys)
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: $dups")

@@ -274,9 +274,9 @@ class DedupSpec extends SparkSpec {
 
     // null tokens in the public simhash kernel carry no vote, no NPE
     val sig = spark.range(1).select(
-      graft.functions.ArrayOps.simhash_sig(
+      graft.functions.ArrayOps.simhash_poly_sig(
         array(lit("a"), lit(null).cast("string"), lit("b"))).as("s"),
-      graft.functions.ArrayOps.simhash_sig(array(lit("a"), lit("b"))).as("t"))
+      graft.functions.ArrayOps.simhash_poly_sig(array(lit("a"), lit("b"))).as("t"))
       .head()
     assert(sig.getLong(0) == sig.getLong(1))
   }

@@ -43,7 +43,7 @@ class ProxKernelPropSpec extends SparkSpec {
       .toDF("doc_id", "toks", "dl")
     val qterms = terms.map(t => (7L, t)).toDF("query_id", "token")
     val ids = docs.map { case (id, _) => (7L, id) }.toDF("query_id", "doc_id")
-    val got = TextOps.panelMinDists(tdocs, qterms, terms, ids, bounded = true)
+    val got = TextOps.panelMinDists(tdocs, qterms, ids, bounded = true)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("mindist"))
       .toMap
     for ((id, toks) <- docs) {
@@ -65,7 +65,7 @@ class ProxKernelPropSpec extends SparkSpec {
       .toDF("doc_id", "toks", "dl")
     val qterms = terms.map(t => (1L, t)).toDF("query_id", "token")
     val ids = docs.map { case (id, _) => (1L, id) }.toDF("query_id", "doc_id")
-    val got = TextOps.panelMinDists(tdocs, qterms, terms, ids, bounded = true)
+    val got = TextOps.panelMinDists(tdocs, qterms, ids, bounded = true)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("mindist"))
       .toMap
     assert(got == Map(1L -> 1L, 2L -> 4L, 5L -> 1L, 6L -> 2L),
